@@ -1257,7 +1257,8 @@ object Dedup {
     * cut-not-drop semantics).
     *
     * `materializeSpans = Some(true)` localCheckpoints the span
-    * relation before the stitch join — the SubstrGcProbe finding
+    * relation before the stitch join — the r16 profile's finding
+    * (BASELINE.md, Round 16: ExactSubstr band root-caused)
     * behind the catalog's widest variance band: with the spans
     * subtree live inside the stitch plan, the O(corpus-positions)
     * explode/sort machinery runs concurrently with the docs-side scan

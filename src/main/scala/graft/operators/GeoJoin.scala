@@ -61,23 +61,59 @@ object GeoJoin {
   private val MPerLonDegEq = 111320.0 // meters per longitude degree at φ=0
   private val PolarBandDeg = 85.0
 
-  /** Per-band longitude tiling: (nCells, cellLonDeg). Pure driver-side
-    * arithmetic — bands are O(180/cellLat), broadcast as literals via
-    * the expressions below.
+  /** The proximity grid at one radius — latitude bands of `cellLat`
+    * degrees, each tiled into its own whole number of longitude cells
+    * (see the object doc). Both sides of [[withinDistance]] and
+    * [[withinDistanceEvents]] key through ONE instance, so the build
+    * and probe keys cannot disagree.
     */
-  private def bandCols(cellLat: Double, radiusM: Double, band: Column)
-      : (Column, Column) = {
-    val e1 = lit(-90.0) + band * cellLat
-    val e2 = e1 + cellLat
-    // the largest |φ| a pair member matched through this band's keys
-    // can sit at: the band's far edge plus one adjacent band
-    val farAbs = least(lit(90.0),
-      greatest(abs(e1), abs(e2)) + cellLat)
-    val nCells = when(farAbs >= PolarBandDeg, lit(1L)).otherwise(
-      greatest(lit(1L), floor(lit(360.0) /
-        lit(1.2 * radiusM / MPerLonDegEq) * cos(radians(farAbs)))
-        .cast("long")))
-    (nCells, lit(360.0) / nCells)
+  private final class ProximityGrid(radiusM: Double) {
+    private val cellLat = 1.2 * radiusM / MPerLatDeg // degrees, ≥ R everywhere
+    private val nBands = math.max(1, math.floor(180.0 / cellLat).toLong)
+
+    /** Per-band longitude tiling: (nCells, cellLonDeg). Pure driver-side
+      * arithmetic — bands are O(180/cellLat), broadcast as literals via
+      * the expressions below.
+      */
+    private def bandCols(band: Column): (Column, Column) = {
+      val e1 = lit(-90.0) + band * cellLat
+      val e2 = e1 + cellLat
+      // the largest |φ| a pair member matched through this band's keys
+      // can sit at: the band's far edge plus one adjacent band
+      val farAbs = least(lit(90.0),
+        greatest(abs(e1), abs(e2)) + cellLat)
+      val nCells = when(farAbs >= PolarBandDeg, lit(1L)).otherwise(
+        greatest(lit(1L), floor(lit(360.0) /
+          lit(1.2 * radiusM / MPerLonDegEq) * cos(radians(farAbs)))
+          .cast("long")))
+      (nCells, lit(360.0) / nCells)
+    }
+
+    def latBand(lat: Column): Column = least(lit(nBands - 1),
+      greatest(lit(0L), floor((lat + 90.0) / cellLat).cast("long")))
+
+    def xcell(band: Column, lon: Column): Column = {
+      val (nCells, w) = bandCols(band)
+      pmod(floor((lon + 180.0) / w).cast("long"), nCells)
+    }
+
+    /** Build-side keys: `df` gains `__band` and `__x`, one row per key
+      * of the 3 bands × 3 x-cells around (`lon`, `lat`), each neighbor
+      * band's x-cell in THAT band's tiling, duplicates removed.
+      */
+    def neighborhood(df: DataFrame, lon: String, lat: String)
+        : DataFrame =
+      df.withColumn("__b0", latBand(col(lat)))
+        .withColumn("__band", explode(array_distinct(array(
+          greatest(lit(0L), col("__b0") - 1), col("__b0"),
+          least(lit(nBands - 1), col("__b0") + 1)))))
+        .withColumn("__xc", xcell(col("__band"), col(lon)))
+        .withColumn("__x", explode(array_distinct(transform(
+          sequence(lit(-1), lit(1)), d => {
+            val n = bandCols(col("__band"))._1
+            pmod(col("__xc") + d, n)
+          }))))
+        .drop("__b0", "__xc")
   }
 
   /** All (a, b) pairs with haversine(a, b) ≤ `radiusM`. Output:
@@ -97,33 +133,14 @@ object GeoJoin {
     require(radiusM > 0 && radiusM <= 1000000.0,
       "radiusM in (0, 1000 km]: the grid margin is sized for " +
         "city-to-region radii, not hemispheres")
-    val cellLat = 1.2 * radiusM / MPerLatDeg // degrees, ≥ R everywhere
-    val nBands = math.max(1, math.floor(180.0 / cellLat).toLong)
-    val latBand = (lat: Column) => least(lit(nBands - 1),
-      greatest(lit(0L), floor((lat + 90.0) / cellLat).cast("long")))
-    def xcell(band: Column, lon: Column): Column = {
-      val (nCells, w) = bandCols(cellLat, radiusM, band)
-      pmod(floor((lon + 180.0) / w).cast("long"), nCells)
-    }
+    val grid = new ProximityGrid(radiusM)
     // probe side: its own cell
     val probe = b.select(col(bId).as("__ib"), col(bLon).as("__lob"),
         col(bLat).as("__lab"))
-      .withColumn("__band", latBand(col("__lab")))
-      .withColumn("__x", xcell(col("__band"), col("__lob")))
-    // build side: 3 bands × 3 x-cells, each neighbor band's own tiling
-    val build = a.select(col(aId).as("__ia"), col(aLon).as("__loa"),
-        col(aLat).as("__laa"))
-      .withColumn("__b0", latBand(col("__laa")))
-      .withColumn("__band", explode(array_distinct(array(
-        greatest(lit(0L), col("__b0") - 1), col("__b0"),
-        least(lit(nBands - 1), col("__b0") + 1)))))
-      .withColumn("__xc", xcell(col("__band"), col("__loa")))
-      .withColumn("__x", explode(array_distinct(transform(
-        sequence(lit(-1), lit(1)), d => {
-          val n = bandCols(cellLat, radiusM, col("__band"))._1
-          pmod(col("__xc") + d, n)
-        }))))
-      .drop("__b0", "__xc")
+      .withColumn("__band", grid.latBand(col("__lab")))
+      .withColumn("__x", grid.xcell(col("__band"), col("__lob")))
+    val build = grid.neighborhood(a.select(col(aId).as("__ia"),
+      col(aLon).as("__loa"), col(aLat).as("__laa")), "__loa", "__laa")
     // no trailing distinct: the probe row carries exactly ONE key and
     // the build row's 9 neighbor keys are array_distinct'ed, so a pair
     // joins at most once — which also keeps the plan stateless, so the
@@ -167,86 +184,17 @@ object GeoJoin {
     * the a-side explodes band and lon-cell (9 keys/row), the b-side
     * explodes the time bucket (3 keys/row) — 9N + 3N shuffled/sorted
     * rows instead of the previous all-on-one-side 27N + N (2.3×
-    * fewer; ProxProbe at sf10g: shuffle write 1532 → 760 MB, sort
-    * spill 3.5 GB → 0). Coverage is unchanged — each ±1 factor may
-    * be enumerated on either side, and exactly one exploded
-    * combination matches per true pair, preserving the
+    * fewer; at sf10g: shuffle write 1532 → 760 MB, sort spill
+    * 3.5 GB → 0, BASELINE.md r19). Coverage is unchanged — each ±1
+    * factor may be enumerated on either side, and exactly one
+    * exploded combination matches per true pair, preserving the
     * pair-joins-at-most-once property the stream-stream form needs.
-    * `timeBucketKeys = false` drops the bucket key (and the b-side
-    * explosion) for state-constrained streams whose per-cell history
-    * is short anyway; batch and dense-history callers keep the
-    * default (candidate volume Σ k² per cell-bucket vs per cell —
-    * 40× fewer candidate evals on the catalog data).
     */
-  /** Exploded probe-side (band, xcell, ±1 time bucket) keys of
-    * [[withinDistanceEvents]] — factored out so ProxProbe can measure
-    * per-key pair mass on exactly the join's key distribution.
-    */
-  private[graft] def proximityProbeKeys(b: DataFrame,
-      bId: String, bLon: String, bLat: String, bTs: String,
-      radiusM: Double, maxGapSeconds: Long,
-      timeBucketKeys: Boolean = true): DataFrame = {
-    val cellLat = 1.2 * radiusM / MPerLatDeg
-    val nBands = math.max(1, math.floor(180.0 / cellLat).toLong)
-    val latBand = (lat: Column) => least(lit(nBands - 1),
-      greatest(lit(0L), floor((lat + 90.0) / cellLat).cast("long")))
-    def xcell(band: Column, lon: Column): Column = {
-      val (nCells, w) = bandCols(cellLat, radiusM, band)
-      pmod(floor((lon + 180.0) / w).cast("long"), nCells)
-    }
-    val bktUs = math.max(maxGapSeconds, 1L) * 1000000L
-    b.select(col(bId).as("__ib"), col(bLon).as("__lob"),
-        col(bLat).as("__lab"), col(bTs).as("__tsb"))
-      .withColumn("__bandb", latBand(col("__lab")))
-      .withColumn("__xb", xcell(col("__bandb"), col("__lob")))
-      .withColumn("__bktb", if (timeBucketKeys)
-        explode(sequence(
-          floor(unix_micros(col("__tsb")) / bktUs).cast("long") - 1,
-          floor(unix_micros(col("__tsb")) / bktUs).cast("long") + 1))
-      else lit(0L))
-  }
-
-  /** Exploded build-side (±1 band, ±1 xcell, time bucket) keys of
-    * [[withinDistanceEvents]] — see [[proximityProbeKeys]].
-    */
-  private[graft] def proximityBuildKeys(a: DataFrame,
-      aId: String, aLon: String, aLat: String, aTs: String,
-      radiusM: Double, maxGapSeconds: Long,
-      timeBucketKeys: Boolean = true): DataFrame = {
-    val cellLat = 1.2 * radiusM / MPerLatDeg
-    val nBands = math.max(1, math.floor(180.0 / cellLat).toLong)
-    val latBand = (lat: Column) => least(lit(nBands - 1),
-      greatest(lit(0L), floor((lat + 90.0) / cellLat).cast("long")))
-    def xcell(band: Column, lon: Column): Column = {
-      val (nCells, w) = bandCols(cellLat, radiusM, band)
-      pmod(floor((lon + 180.0) / w).cast("long"), nCells)
-    }
-    val bktUs = math.max(maxGapSeconds, 1L) * 1000000L
-    a.select(col(aId).as("__ia"), col(aLon).as("__loa"),
-        col(aLat).as("__laa"), col(aTs).as("__tsa"))
-      .withColumn("__b0", latBand(col("__laa")))
-      .withColumn("__band", explode(array_distinct(array(
-        greatest(lit(0L), col("__b0") - 1), col("__b0"),
-        least(lit(nBands - 1), col("__b0") + 1)))))
-      .withColumn("__xc", xcell(col("__band"), col("__loa")))
-      .withColumn("__x", explode(array_distinct(transform(
-        sequence(lit(-1), lit(1)), d => {
-          val n = bandCols(cellLat, radiusM, col("__band"))._1
-          pmod(col("__xc") + d, n)
-        }))))
-      .withColumn("__bkt", if (timeBucketKeys)
-        floor(unix_micros(col("__tsa")) / bktUs).cast("long")
-      else lit(0L))
-      .drop("__b0", "__xc")
-  }
-
   def withinDistanceEvents(a: DataFrame, b: DataFrame,
       aId: String, aLon: String, aLat: String, aTs: String,
       bId: String, bLon: String, bLat: String, bTs: String,
       radiusM: Double, maxGapSeconds: Long,
-      selfPairs: Boolean = false,
-      timeBucketKeys: Boolean = true,
-      probeHint: Option[String] = None): DataFrame = {
+      selfPairs: Boolean = false): DataFrame = {
     require(radiusM > 0 && radiusM <= 1000000.0,
       "radiusM in (0, 1000 km]")
     require(maxGapSeconds >= 0, "maxGapSeconds >= 0")
@@ -258,34 +206,40 @@ object GeoJoin {
     // distinct, and exactly one combination matches per true pair, so
     // coverage and the pair-joins-at-most-once property are unchanged.
     // Shuffled/sorted row volume drops from 27·N + N to 9·N + 3·N
-    // (2.3×); ProxProbe at sf10g: alloc 319 → 166 GB, and the
-    // stream-stream form's buffered state drops the same way.
-    val probe = proximityProbeKeys(b, bId, bLon, bLat, bTs, radiusM,
-      maxGapSeconds, timeBucketKeys)
-    val build = proximityBuildKeys(a, aId, aLon, aLat, aTs, radiusM,
-      maxGapSeconds, timeBucketKeys)
+    // (2.3×); at sf10g alloc fell 319 → 166 GB (BASELINE.md r19), and
+    // the stream-stream form's buffered state drops the same way.
+    val grid = new ProximityGrid(radiusM)
+    val bktUs = math.max(maxGapSeconds, 1L) * 1000000L
+    val bucket = (ts: Column) => floor(unix_micros(ts) / bktUs).cast("long")
+    val probe = b.select(col(bId).as("__ib"), col(bLon).as("__lob"),
+        col(bLat).as("__lab"), col(bTs).as("__tsb"))
+      .withColumn("__bandb", grid.latBand(col("__lab")))
+      .withColumn("__xb", grid.xcell(col("__bandb"), col("__lob")))
+      .withColumn("__bktb", explode(sequence(
+        bucket(col("__tsb")) - 1, bucket(col("__tsb")) + 1)))
+    val build = grid.neighborhood(a.select(col(aId).as("__ia"),
+        col(aLon).as("__loa"), col(aLat).as("__laa"),
+        col(aTs).as("__tsa")), "__loa", "__laa")
+      .withColumn("__bkt", bucket(col("__tsa")))
     val gap = s"INTERVAL $maxGapSeconds SECONDS"
-    // probeHint ("shuffle_hash" / "merge") steers the join strategy on
-    // the UNEXPLODED side — the strategy A/B knob (ProxProbe, r19)
-    val probeH = probeHint.map(probe.hint(_)).getOrElse(probe)
     // The ordered-pair cut (`__ia < __ib`, selfPairs) lives IN the
     // join condition, before the time-range tests, so id-rejected
     // candidate pairs never reach the haversine projection at all
     // (r19 — the dedup_embedding conjunct lesson, applied in the form
     // the A/B favored). The haversine itself deliberately STAYS a
     // post-join computed-once column + Filter rather than a join-
-    // condition conjunct: ProxProbe at sf10g measured the full move
-    // (trig in the condition, recomputed in the projection for
-    // survivors) at 618 GB allocated vs 352 GB for this shape, with
-    // no wall win — the condition-plus-projection double evaluation
-    // costs more than the short-circuit saves.
+    // condition conjunct: the sf10g A/B (BASELINE.md r19) measured the
+    // full move (trig in the condition, recomputed in the projection
+    // for survivors) at 618 GB allocated vs 352 GB for this shape,
+    // with no wall win — the condition-plus-projection double
+    // evaluation costs more than the short-circuit saves.
     val idCut = if (selfPairs) col("__ia") < col("__ib") else lit(true)
     // A Δlat lower-bound precheck in the condition (meridional
     // distance ≤ haversine, rejects ~44% of grid candidates with two
     // float ops) was A/B-measured at sf10g and moved NEITHER wall nor
     // alloc_gb — the join's allocation floor is pair-iteration
     // machinery, not the trig verify — so it is deliberately absent.
-    build.join(probeH,
+    build.join(probe,
         col("__band") === col("__bandb") && col("__x") === col("__xb") &&
           col("__bkt") === col("__bktb") && idCut &&
           col("__tsb") >= col("__tsa") - expr(gap) &&
@@ -342,7 +296,7 @@ object GeoJoin {
     * For holes use [[pointsInMultipolygons]] (first-class since
     * round 16). Output: (point_id, poly_id).
     */
-  def pointsInPolygons(points: DataFrame, polys: DataFrame,
+  private[graft] def pointsInPolygons(points: DataFrame, polys: DataFrame,
       pId: String, pLon: String, pLat: String,
       gId: String, ringCol: String, cellDeg: Double = 0.5): DataFrame = {
     require(cellDeg > 0, "cellDeg > 0")
@@ -395,7 +349,7 @@ object GeoJoin {
     * pass never runs and the plan is exactly [[pointsInPolygons]].
     * Same output contract: (point_id, poly_id).
     */
-  def pointsInPolygonsAuto(points: DataFrame, polys: DataFrame,
+  private[graft] def pointsInPolygonsAuto(points: DataFrame, polys: DataFrame,
       pId: String, pLon: String, pLat: String,
       gId: String, ringCol: String, cellDeg: Double = 0.5,
       maxCellsPerPoly: Long = 4096L): DataFrame = {
@@ -445,7 +399,7 @@ object GeoJoin {
     * grouped count per candidate (point, relation), parity filter.
     * Output: (point_id, poly_id).
     */
-  def pointsInMultipolygons(points: DataFrame, mpolys: DataFrame,
+  private[graft] def pointsInMultipolygons(points: DataFrame, mpolys: DataFrame,
       pId: String, pLon: String, pLat: String,
       gId: String, outersCol: String, innersCol: String,
       cellDeg: Double = 0.5): DataFrame = {
@@ -509,7 +463,7 @@ object GeoJoin {
     * verify work — the pip1m lesson; size `cellDeg` near the median
     * segment extent plus margin.
     */
-  def pointsNearLines(points: DataFrame, lines: DataFrame,
+  private[graft] def pointsNearLines(points: DataFrame, lines: DataFrame,
       pId: String, pLon: String, pLat: String,
       lId: String, pathCol: String,
       radiusM: Double, cellDeg: Double = 0.5): DataFrame =
@@ -830,7 +784,7 @@ object GeoJoin {
     * and key by (id, part), same as the containment joins.
     * Output: (id_a, id_b).
     */
-  def polygonsIntersect(a: DataFrame, b: DataFrame,
+  private[graft] def polygonsIntersect(a: DataFrame, b: DataFrame,
       aId: String, aRing: String, bId: String, bRing: String,
       cellDeg: Double = 0.5, selfPairs: Boolean = false): DataFrame = {
     require(cellDeg > 0, "cellDeg > 0")
@@ -873,7 +827,7 @@ object GeoJoin {
     * aggregates (bounded driver state); with no whales the plan is
     * exactly single-pass [[polygonsIntersect]].
     */
-  def polygonsIntersectAuto(a: DataFrame, b: DataFrame,
+  private[graft] def polygonsIntersectAuto(a: DataFrame, b: DataFrame,
       aId: String, aRing: String, bId: String, bRing: String,
       cellDeg: Double = 0.5, selfPairs: Boolean = false,
       maxCellsPerPoly: Long = 4096L): DataFrame = {

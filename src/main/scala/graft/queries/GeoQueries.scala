@@ -605,8 +605,9 @@ object GeoQueries {
             unix_micros(col("ts_b")).as("ts_b_us"),
             round(col("dist_m"), 0).as("dist_m"))
           // orderByOnce (r19, second look): the first A/B was called
-          // inconclusive under load; ProxProbe then isolated the join
-          // itself at ~28 s / 375 GB alloc — the catalog readings
+          // inconclusive under load; a join-only probe (BASELINE.md
+          // r19) then isolated the join itself at ~28 s / 375 GB
+          // alloc — the catalog readings
           // (112–212 s, 1.09 TB) are the SORT of the ~100M-pair output
           // plus the sampler re-executing the join. Quiet re-probe:
           // as-is 263/153 s, fixed 152/146 s.

@@ -1007,6 +1007,42 @@ class GeoJoinSpec extends SparkSpec {
     assert(got.subsetOf(viaFilter)) // proximity pairs minus the time cut
   }
 
+  test("withinDistanceEvents == brute-force haversine + time gap at three " +
+      "radii over dateline / high-lat / polar / equator clouds, " +
+      "self and cross pairs") {
+    import spark.implicits._
+    // whole minutes over four gaps: pairs straddle several time
+    // buckets and some sit exactly at |Δt| = gap
+    val gapS = 600L
+    val t0 = 1700000123L // not bucket-aligned
+    val rnd = new scala.util.Random(9)
+    val pts = cloud(42, 250).map { case (id, lon, lat) =>
+      (id, lon, lat, t0 + 60L * rnd.nextInt(41)) }
+    val df = pts.map { case (id, lon, lat, s) =>
+        (id, lon, lat, new java.sql.Timestamp(s * 1000L)) }
+      .toDF("id", "lon", "lat", "ts")
+    for (radius <- Seq(5000.0, 50000.0, 400000.0);
+        self <- Seq(true, false)) {
+      val got = GeoJoin.withinDistanceEvents(df, df,
+          "id", "lon", "lat", "ts", "id", "lon", "lat", "ts",
+          radius, gapS, selfPairs = self)
+        .select($"id_a", $"id_b").as[(Long, Long)].collect()
+      val want = (for {
+        a <- pts; b <- pts if !self || a._1 < b._1
+        if math.abs(a._4 - b._4) <= gapS
+        if hav(a._2, a._3, b._2, b._3) <= radius
+      } yield (a._1, b._1)).toSet
+      assert(got.length == got.toSet.size, s"radius=$radius self=$self " +
+        "a pair joined more than once")
+      assert(got.toSet == want,
+        s"radius=$radius self=$self " +
+          s"missing=${(want -- got).take(5)} " +
+          s"extra=${(got.toSet -- want).take(5)} " +
+          s"sizes=${got.length}/${want.size}")
+      assert(want.exists { case (i, j) => i != j })
+    }
+  }
+
   test("linesIntersectPolygons == brute reference (crossings OR " +
       "first-vertex inside); loop-around path excluded; fully-inside " +
       "path included") {
@@ -1259,10 +1295,18 @@ class GeoJoinSpec extends SparkSpec {
   test("plan: no cartesian/nested-loop join; one equi-join on the grid key") {
     import spark.implicits._
     val df = cloud(7, 50).toDF("id", "lon", "lat")
-    val plan = GeoJoin.withinDistance(df, df, "id", "lon", "lat",
-        "id", "lon", "lat", 10000.0, selfPairs = true)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"), plan.take(800))
+    val ev = df.withColumn("ts",
+      timestamp_seconds(lit(1700000000L) + $"id" * 97))
+    for (plan <- Seq(
+        GeoJoin.withinDistance(df, df, "id", "lon", "lat",
+          "id", "lon", "lat", 10000.0, selfPairs = true),
+        GeoJoin.withinDistanceEvents(ev, ev, "id", "lon", "lat", "ts",
+          "id", "lon", "lat", "ts", 10000.0, 600L, selfPairs = true))
+      .map(_.queryExecution.executedPlan.toString)) {
+      assert(!plan.contains("CartesianProduct") &&
+        !plan.contains("BroadcastNestedLoopJoin"), plan.take(800))
+      assert("(BroadcastHash|ShuffledHash|SortMerge)Join".r
+        .findAllIn(plan).size == 1, plan.take(800))
+    }
   }
 }
