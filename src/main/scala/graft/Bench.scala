@@ -95,10 +95,16 @@ object Bench {
     val memSpill, diskSpill, gcMs, shufWrite, input = new AtomicLong(0L)
     val peakExec, maxTaskMs = new AtomicLong(0L)
     val evictDrop, evictDisk = new AtomicLong(0L)
+    // per-task fixed cost: Σ executorDeserializeTime is what every task
+    // pays to unpack its task binary (RDD lineage, reader and writer
+    // factories) before it runs
+    val deserMs, tasks = new AtomicLong(0L)
     override def onTaskEnd(
         te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
       val m = te.taskMetrics
       if (m != null) {
+        deserMs.addAndGet(m.executorDeserializeTime)
         memSpill.addAndGet(m.memoryBytesSpilled)
         diskSpill.addAndGet(m.diskBytesSpilled)
         gcMs.addAndGet(m.jvmGCTime)
@@ -118,7 +124,7 @@ object Bench {
       }
     }
     def reset(): Unit = Seq(memSpill, diskSpill, gcMs, shufWrite, input,
-      peakExec, maxTaskMs, evictDrop, evictDisk).foreach(_.set(0L))
+      peakExec, maxTaskMs, evictDrop, evictDisk, deserMs, tasks).foreach(_.set(0L))
     /** One compact JSON object; bytes reported as integer MB. */
     def json(storePreMb: Long, storePostMb: Long,
         allocGb: Double = Double.NaN): String = {
@@ -132,6 +138,7 @@ object Bench {
         s""""gc_s":${gcMs.get / 1e3},"peak_exec_mb":${mb(peakExec.get)},""" +
         s""""shuf_w_mb":${mb(shufWrite.get)},"input_mb":${mb(input.get)},""" +
         s""""maxtask_s":${maxTaskMs.get / 1e3},""" + alloc +
+        s""""deser_s":${deserMs.get / 1e3},"tasks":${tasks.get},""" +
         s""""evict_drop":${evictDrop.get},"evict_disk":${evictDisk.get},""" +
         s""""store_pre_mb":$storePreMb,"store_post_mb":$storePostMb}"""
     }

@@ -24,10 +24,18 @@ object PoiPipeline {
     * @param dim   raw TagInfo dimension (key, value, count, in_wiki)
     */
   def run(nodes: DataFrame, ways: DataFrame, dim: DataFrame,
-      settings: PoiSettings = PoiSettings()): Result = {
-    val prepared = TagDimension.prepare(dim, settings)
-    val pairs = TagDimension.toPairs(prepared, settings)
+      settings: PoiSettings = PoiSettings()): Result =
+    runPairs(nodes, ways, dimensionPairs(dim, settings), settings)
 
+  /** The tag dimension's (key, value) pairs: the one eager step of a
+    * pipeline build (a window top-k plus a collect), so each build
+    * computes it once and hands it to every classify.
+    */
+  private def dimensionPairs(dim: DataFrame, settings: PoiSettings): Seq[(String, String)] =
+    TagDimension.toPairs(TagDimension.prepare(dim, settings), settings)
+
+  private def runPairs(nodes: DataFrame, ways: DataFrame, pairs: Seq[(String, String)],
+      settings: PoiSettings): Result = {
     // A2 — progress instrumentation: the reference logs a line per 1M
     // objects evaluated (filter.py:213-228); the declarative analog is
     // an Observation-style metric riding the existing pass (no extra
@@ -72,10 +80,10 @@ object PoiPipeline {
   def runWithRelations(nodes: DataFrame, ways: DataFrame,
       relations: DataFrame, wayPaths: DataFrame, dim: DataFrame,
       settings: PoiSettings = PoiSettings()): Result = {
-    val base = run(nodes, ways, dim, settings)
+    val pairs = dimensionPairs(dim, settings)
+    val base = runPairs(nodes, ways, pairs, settings)
     if (settings.skipWays) base
     else {
-      val pairs = TagDimension.toPairs(TagDimension.prepare(dim, settings), settings)
       val areas = RelationAssembly.relationAreas(relations, wayPaths)
       val classified = PoiClassifier.classify(areas, pairs, settings)
       val trimmed =

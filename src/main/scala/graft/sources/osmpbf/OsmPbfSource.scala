@@ -4,6 +4,7 @@ import java.util
 
 import graft.sources.osmxml.OsmXmlSource
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
@@ -14,6 +15,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 reader for OSM PBF files — the reference's preferred
   * input ("PBF is quickest", README.md:7; S1 in SURVEY.md §2.1).
@@ -33,8 +35,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * only the ~16-byte frame headers to index blob offsets (no
   * decompression), then schedules ONE INPUT PARTITION PER DATA BLOB, so
   * a single planet file parallelizes across the cluster; each reader
-  * seeks to its blob, inflates ~8k entities, and streams rows. Schemas
-  * match the osm-xml source exactly.
+  * seeks to its blob, inflates ~8k entities, and streams rows. The
+  * session's Hadoop conf reaches those readers as one broadcast per
+  * scan ([[graft.sources.SessionConf]]), not inside the per-task
+  * factory. Schemas match the osm-xml source exactly.
+  *
+  * Malformed bytes fail with [[PbfFormatException]] naming the file and
+  * blob offset; a blob never inflates past the spec's 32 MiB limit.
   */
 class OsmPbfSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "osm-pbf"
@@ -74,9 +81,7 @@ private[osmpbf] class OsmPbfTable(schema: StructType, kind: String, paths: Seq[S
       override def build(): org.apache.spark.sql.connector.write.Write =
         new org.apache.spark.sql.connector.write.Write {
           override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-            new PbfBatchWrite(kind, paths.head,
-              new graft.sources.SerializableHadoopConf(
-                org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
+            new PbfBatchWrite(kind, paths.head, graft.sources.SessionConf.broadcast())
         }
     }
   }
@@ -112,6 +117,10 @@ private[osmpbf] class OsmPbfTable(schema: StructType, kind: String, paths: Seq[S
               val size = st.getLen
               while (offset < size) {
                 val headerLen = in.readInt() // 4-byte BE
+                // spec: BlobHeader < 64 KiB, Blob < 32 MiB
+                if (headerLen < 0 || headerLen > (64 << 10))
+                  throw new PbfFormatException(
+                    s"malformed PBF frame at ${st.getPath}:$offset: BlobHeader length $headerLen")
                 val headerBytes = new Array[Byte](headerLen)
                 in.readFully(headerBytes)
                 val hr = new ProtoReader(headerBytes)
@@ -122,6 +131,9 @@ private[osmpbf] class OsmPbfTable(schema: StructType, kind: String, paths: Seq[S
                   case (3, 0) => dataSize = hr.readVarint().toInt
                   case (_, wt) => hr.skip(wt)
                 }
+                if (dataSize < 0 || dataSize > PbfBlobDecoder.MaxRawBlobSize)
+                  throw new PbfFormatException(
+                    s"malformed PBF frame at ${st.getPath}:$offset: Blob length $dataSize")
                 val dataOffset = offset + 4 + headerLen
                 if (blobType == "OSMData")
                   parts += PbfBlobPartition(st.getPath.toString, dataOffset, dataSize)
@@ -135,22 +147,22 @@ private[osmpbf] class OsmPbfTable(schema: StructType, kind: String, paths: Seq[S
       }
 
       override def createReaderFactory(): PartitionReaderFactory =
-        new PbfReaderFactory(kind, schema, required,
-          new graft.sources.SerializableHadoopConf(
-            org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
+        new PbfReaderFactory(kind, schema, required, graft.sources.SessionConf.broadcast())
     }
 }
 
 /** Top-level (serializable) factory — an anonymous one would capture
-  * the non-serializable ScanBuilder. Ships the driver's Hadoop conf so
-  * session-configured filesystem options reach the executor readers.
+  * the non-serializable ScanBuilder. Holds the broadcast handle of the
+  * driver's Hadoop conf ([[graft.sources.SessionConf]]), so
+  * session-configured filesystem options reach the executor readers
+  * without each task deserializing a copy of the conf.
   */
 private[osmpbf] class PbfReaderFactory(kind: String, full: StructType,
-    required: StructType, conf: graft.sources.SerializableHadoopConf)
+    required: StructType, conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     graft.sources.Pruning.project(
-      new PbfBlobReader(p.asInstanceOf[PbfBlobPartition], kind, conf.value),
+      new PbfBlobReader(p.asInstanceOf[PbfBlobPartition], kind, conf.value.value),
       full, required)
 }
 
@@ -158,7 +170,7 @@ private[osmpbf] case class PbfBlobPartition(path: String, offset: Long, length: 
     extends InputPartition
 
 private[osmpbf] class PbfBatchWrite(kind: String, dir: String,
-    conf: graft.sources.SerializableHadoopConf)
+    conf: Broadcast[SerializableConfiguration])
     extends org.apache.spark.sql.connector.write.BatchWrite {
   import org.apache.spark.sql.connector.write._
 
@@ -169,11 +181,11 @@ private[osmpbf] class PbfBatchWrite(kind: String, dir: String,
 }
 
 private[osmpbf] class PbfDataWriterFactory(kind: String, dir: String,
-    conf: graft.sources.SerializableHadoopConf)
+    conf: Broadcast[SerializableConfiguration])
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new PbfDataWriter(kind, dir, partitionId, taskId, conf.value)
+    new PbfDataWriter(kind, dir, partitionId, taskId, conf.value.value)
 }
 
 private[osmpbf] case class PbfCommitMessage(path: String)
@@ -216,7 +228,7 @@ private[osmpbf] class PbfDataWriter(kind: String, dir: String,
   override def close(): Unit = ()
 }
 
-/** Decodes one OSMData blob into rows of the requested kind. */
+/** Reads one OSMData blob's bytes and streams its decoded rows. */
 private[osmpbf] class PbfBlobReader(part: PbfBlobPartition, kind: String,
     conf: org.apache.hadoop.conf.Configuration)
     extends PartitionReader[InternalRow] {
@@ -226,38 +238,97 @@ private[osmpbf] class PbfBlobReader(part: PbfBlobPartition, kind: String,
     val in = hp.getFileSystem(conf).open(hp)
     val compressed = new Array[Byte](part.length)
     try { in.seek(part.offset); in.readFully(compressed) } finally in.close()
+    new PbfBlobDecoder(kind, s"${part.path}:${part.offset}").decode(compressed)
+  }
 
+  private var current: InternalRow = _
+  override def next(): Boolean = { if (rows.hasNext) { current = rows.next(); true } else false }
+  override def get(): InternalRow = current
+  override def close(): Unit = ()
+}
+
+/** Malformed PBF bytes. The message names the file and byte offset of
+  * the blob that failed (`where`) and what was wrong with it; the
+  * decoder never lets an untrusted blob surface as a bare
+  * `ArrayIndexOutOfBoundsException` or spin without progress.
+  */
+final class PbfFormatException(msg: String, cause: Throwable = null)
+    extends java.io.IOException(msg, cause)
+
+private[osmpbf] object PbfBlobDecoder {
+  /** The PBF spec's cap on an uncompressed blob (wiki PBF_Format,
+    * "File format"): a declared `raw_size` above it is refused, and an
+    * undeclared one never grows the inflate buffer past it.
+    */
+  val MaxRawBlobSize: Int = 32 << 20
+}
+
+/** Blob bytes → rows of one kind (`nodes`, `ways` or `relations`),
+  * decoded eagerly; `where` labels every error (file:offset).
+  */
+private[osmpbf] final class PbfBlobDecoder(kind: String, where: String) {
+  import PbfBlobDecoder.MaxRawBlobSize
+
+  private def corrupt(why: String): Nothing = throw new PbfFormatException(why)
+
+  def decode(blob: Array[Byte]): Iterator[InternalRow] =
+    try parsePrimitiveBlock(inflate(blob)).iterator
+    catch {
+      case e: PbfFormatException =>
+        throw new PbfFormatException(s"malformed PBF blob at $where: ${e.getMessage}", e)
+    }
+
+  private def inflate(blob: Array[Byte]): Array[Byte] = {
     // Blob: 1=raw bytes, 2=raw_size, 3=zlib_data
     var raw: Array[Byte] = null
-    var rawSize = -1
+    var rawSize = -1L
     var zlib: Array[Byte] = null
-    val br = new ProtoReader(compressed)
+    val br = new ProtoReader(blob)
     while (br.hasNext) br.readTag() match {
-      case (1, 2) => val (o, l) = br.readBytes(); raw = compressed.slice(o, o + l)
-      case (2, 0) => rawSize = br.readVarint().toInt
-      case (3, 2) => val (o, l) = br.readBytes(); zlib = compressed.slice(o, o + l)
+      case (1, 2) => val (o, l) = br.readBytes(); raw = blob.slice(o, o + l)
+      case (2, 0) => rawSize = br.readVarint()
+      case (3, 2) => val (o, l) = br.readBytes(); zlib = blob.slice(o, o + l)
       case (_, wt) => br.skip(wt)
     }
-    val block =
-      if (raw != null) raw
-      else {
-        // raw_size is optional in the spec: when absent, loop inflate()
-        // growing the buffer until finished() — a fixed guess would
-        // silently truncate the block
-        val inf = new java.util.zip.Inflater()
-        inf.setInput(zlib)
-        var out = new Array[Byte](if (rawSize > 0) rawSize else math.max(zlib.length * 4, 1 << 16))
-        var n = 0
-        while (!inf.finished() && n < Int.MaxValue / 2) {
-          if (n == out.length) out = java.util.Arrays.copyOf(out, out.length * 2)
-          n += inf.inflate(out, n, out.length - n)
-          if (inf.needsInput() && !inf.finished())
-            throw new java.io.IOException(s"truncated zlib data in ${part.path}")
+    if (raw != null) return raw
+    if (zlib == null) corrupt("blob carries neither raw nor zlib_data")
+    if (rawSize > MaxRawBlobSize)
+      corrupt(s"raw_size $rawSize exceeds the $MaxRawBlobSize-byte blob limit")
+    // raw_size is optional in the spec: when absent, loop inflate()
+    // growing the buffer until finished() — a fixed guess would
+    // silently truncate the block
+    val inf = new java.util.zip.Inflater()
+    try {
+      inf.setInput(zlib)
+      var out = new Array[Byte](
+        if (rawSize > 0) rawSize.toInt
+        else math.min(math.max(zlib.length * 4, 1 << 16), MaxRawBlobSize))
+      var n = 0
+      while (!inf.finished()) {
+        if (n == out.length) {
+          // one byte of headroom past the cap lets a stream of exactly
+          // MaxRawBlobSize bytes reach its trailer
+          if (n > MaxRawBlobSize)
+            corrupt(s"zlib data inflates past the $MaxRawBlobSize-byte blob limit")
+          out = java.util.Arrays.copyOf(out, math.min(out.length * 2, MaxRawBlobSize + 1))
         }
-        inf.end()
-        if (n == out.length) out else java.util.Arrays.copyOf(out, n)
+        val read = inf.getBytesRead
+        val got =
+          try inf.inflate(out, n, out.length - n)
+          catch { case e: java.util.zip.DataFormatException => corrupt(s"bad zlib data: ${e.getMessage}") }
+        // no output and no input consumed: the stream cannot advance
+        // (truncated input, or a preset dictionary the spec never uses)
+        if (got == 0 && inf.getBytesRead == read && !inf.finished())
+          corrupt(
+            if (inf.needsDictionary()) "zlib data needs a preset dictionary"
+            else if (inf.needsInput()) "truncated zlib data"
+            else "zlib inflate made no progress")
+        n += got
       }
-    parsePrimitiveBlock(block)
+      if (n > MaxRawBlobSize)
+        corrupt(s"zlib data inflates past the $MaxRawBlobSize-byte blob limit")
+      if (n == out.length) out else java.util.Arrays.copyOf(out, n)
+    } finally inf.end()
   }
 
   private def parsePrimitiveBlock(block: Array[Byte]): Iterator[InternalRow] = {
@@ -285,8 +356,8 @@ private[osmpbf] class PbfBlobReader(part: PbfBlobPartition, kind: String,
       case (_, wt) => pr.skip(wt)
     }
 
-    groups.iterator.flatMap { g =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    groups.foreach { g =>
       while (g.hasNext) g.readTag() match {
         case (2, 2) if kind == "nodes" => // DenseNodes
           out ++= parseDenseNodes(g.subReader(), strings, granularity,
@@ -297,58 +368,78 @@ private[osmpbf] class PbfBlobReader(part: PbfBlobPartition, kind: String,
           out += parseRelation(g.subReader(), strings, dateGranularity)
         case (_, wt) => g.skip(wt)
       }
-      out
     }
+    out.iterator
   }
 
   private def tsMicros(raw: Long, dateGranularity: Long): Any =
     if (raw == 0) null else java.lang.Long.valueOf(raw * dateGranularity * 1000L)
 
+  private def str(strings: Array[UTF8String], i: Long): UTF8String =
+    if (i < 0 || i >= strings.length)
+      corrupt(s"string-table index $i out of range [0, ${strings.length})")
+    else strings(i.toInt)
+
+  /** A parallel array must match the id array entry for entry; the
+    * optional DenseInfo columns may also be absent (`optional`).
+    */
+  private def checkLength(name: String, a: Array[Long], n: Int,
+      optional: Boolean = false): Unit =
+    if (a.length != n && !(optional && a.isEmpty))
+      corrupt(s"$name has ${a.length} entries for $n ids")
+
+  private def longs() = new scala.collection.mutable.ArrayBuilder.ofLong
+
   private def parseDenseNodes(d: ProtoReader, strings: Array[UTF8String],
       granularity: Long, latOffset: Long, lonOffset: Long,
       dateGranularity: Long): Seq[InternalRow] = {
-    var ids = Array.empty[Long]
-    var lats = Array.empty[Long]
-    var lons = Array.empty[Long]
-    var keysVals = Array.empty[Long]
-    var versions = Array.empty[Long]
-    var timestamps = Array.empty[Long]
-    var changesets = Array.empty[Long]
-    var uids = Array.empty[Long]
-    var usids = Array.empty[Long]
-    var visibles = Array.empty[Long]
+    val idsB, latsB, lonsB, keysValsB = longs()
+    val versionsB, timestampsB, changesetsB, uidsB, usidsB, visiblesB = longs()
     // packed (wiretype 2) chunks concatenate; spec-legal UNPACKED
     // encodings (wiretype 0, one value per tag) append too instead of
     // falling into the skip case and silently dropping data
     while (d.hasNext) d.readTag() match {
-      case (1, 2) => ids ++= d.packedSVarints()
-      case (1, 0) => ids :+= d.readSVarint()
+      case (1, 2) => idsB ++= d.packedSVarints()
+      case (1, 0) => idsB += d.readSVarint()
       case (5, 2) => // DenseInfo
         val di = d.subReader()
         while (di.hasNext) di.readTag() match {
-          case (1, 2) => versions ++= di.packedVarints()
-          case (1, 0) => versions :+= di.readVarint()
-          case (2, 2) => timestamps ++= di.packedSVarints()
-          case (2, 0) => timestamps :+= di.readSVarint()
-          case (3, 2) => changesets ++= di.packedSVarints()
-          case (3, 0) => changesets :+= di.readSVarint()
-          case (4, 2) => uids ++= di.packedSVarints()
-          case (4, 0) => uids :+= di.readSVarint()
-          case (5, 2) => usids ++= di.packedSVarints() // user_sid, delta
-          case (5, 0) => usids :+= di.readSVarint()
-          case (6, 2) => visibles ++= di.packedVarints()
-          case (6, 0) => visibles :+= di.readVarint()
+          case (1, 2) => versionsB ++= di.packedVarints()
+          case (1, 0) => versionsB += di.readVarint()
+          case (2, 2) => timestampsB ++= di.packedSVarints()
+          case (2, 0) => timestampsB += di.readSVarint()
+          case (3, 2) => changesetsB ++= di.packedSVarints()
+          case (3, 0) => changesetsB += di.readSVarint()
+          case (4, 2) => uidsB ++= di.packedSVarints()
+          case (4, 0) => uidsB += di.readSVarint()
+          case (5, 2) => usidsB ++= di.packedSVarints() // user_sid, delta
+          case (5, 0) => usidsB += di.readSVarint()
+          case (6, 2) => visiblesB ++= di.packedVarints()
+          case (6, 0) => visiblesB += di.readVarint()
           case (_, wt) => di.skip(wt)
         }
-      case (8, 2) => lats ++= d.packedSVarints()
-      case (8, 0) => lats :+= d.readSVarint()
-      case (9, 2) => lons ++= d.packedSVarints()
-      case (9, 0) => lons :+= d.readSVarint()
-      case (10, 2) => keysVals ++= d.packedVarints()
-      case (10, 0) => keysVals :+= d.readVarint()
+      case (8, 2) => latsB ++= d.packedSVarints()
+      case (8, 0) => latsB += d.readSVarint()
+      case (9, 2) => lonsB ++= d.packedSVarints()
+      case (9, 0) => lonsB += d.readSVarint()
+      case (10, 2) => keysValsB ++= d.packedVarints()
+      case (10, 0) => keysValsB += d.readVarint()
       case (_, wt) => d.skip(wt)
     }
+    val ids = idsB.result(); val lats = latsB.result(); val lons = lonsB.result()
+    val keysVals = keysValsB.result()
+    val versions = versionsB.result(); val timestamps = timestampsB.result()
+    val changesets = changesetsB.result(); val uids = uidsB.result()
+    val usids = usidsB.result(); val visibles = visiblesB.result()
     val n = ids.length
+    checkLength("DenseNodes.lat", lats, n)
+    checkLength("DenseNodes.lon", lons, n)
+    checkLength("DenseInfo.version", versions, n, optional = true)
+    checkLength("DenseInfo.timestamp", timestamps, n, optional = true)
+    checkLength("DenseInfo.changeset", changesets, n, optional = true)
+    checkLength("DenseInfo.uid", uids, n, optional = true)
+    checkLength("DenseInfo.user_sid", usids, n, optional = true)
+    checkLength("DenseInfo.visible", visibles, n, optional = true)
     var id = 0L; var lat = 0L; var lon = 0L; var ts = 0L; var cs = 0L; var uid = 0L
     var usid = 0L
     var kv = 0
@@ -361,8 +452,10 @@ private[osmpbf] class PbfBlobReader(part: PbfBlobPartition, kind: String,
       val keys = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
       val vals = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
       while (kv < keysVals.length && keysVals(kv) != 0) {
-        keys += strings(keysVals(kv).toInt)
-        vals += strings(keysVals(kv + 1).toInt)
+        if (kv + 1 == keysVals.length)
+          corrupt(s"DenseNodes.keys_vals ends inside a key/value pair")
+        keys += str(strings, keysVals(kv))
+        vals += str(strings, keysVals(kv + 1))
         kv += 2
       }
       kv += 1 // the 0 separator
@@ -376,55 +469,71 @@ private[osmpbf] class PbfBlobReader(part: PbfBlobPartition, kind: String,
           new GenericArrayData(vals.toArray[Any])),
         Double.box(1e-9 * (lonOffset + granularity * lon)),
         Double.box(1e-9 * (latOffset + granularity * lat)),
-        if (usids.nonEmpty && usid != 0) strings(usid.toInt) else null,
+        if (usids.nonEmpty && usid != 0) str(strings, usid) else null,
         // visible absent → true (only history files carry deletions)
         Boolean.box(if (visibles.isEmpty) true else visibles(i) != 0L)))
     }
   }
 
-  private def parseWay(w: ProtoReader, strings: Array[UTF8String],
-      dateGranularity: Long): InternalRow = {
-    var id = 0L
-    var keys = Array.empty[Long]
-    var vals = Array.empty[Long]
-    var refs = Array.empty[Long]
+  /** The Info fields ways and relations share:
+    * (version, timestamp, changeset, uid, user name, visible).
+    */
+  private type Info = (Any, Any, Any, Any, Any, Any)
+  private val NoInfo: Info = (null, null, null, null, null, Boolean.box(true))
+
+  private def parseInfo(info: ProtoReader, strings: Array[UTF8String],
+      dateGranularity: Long): Info = {
     var version: Any = null
     var ts: Any = null
     var changeset: Any = null
     var uid: Any = null
     var userName: Any = null
     var visible: Any = Boolean.box(true)
-    var refDeltas = Array.empty[Long]
+    while (info.hasNext) info.readTag() match {
+      case (1, 0) => version = Int.box(info.readVarint().toInt)
+      case (2, 0) => ts = tsMicros(info.readVarint(), dateGranularity)
+      case (3, 0) => changeset = Long.box(info.readVarint())
+      case (4, 0) => uid = Int.box(info.readVarint().toInt)
+      case (5, 0) =>
+        val sid = info.readVarint()
+        if (sid != 0) userName = str(strings, sid)
+      case (6, 0) => visible = Boolean.box(info.readVarint() != 0L)
+      case (_, wt) => info.skip(wt)
+    }
+    (version, ts, changeset, uid, userName, visible)
+  }
+
+  private def tagMap(owner: String, keys: Array[Long], vals: Array[Long],
+      strings: Array[UTF8String]): ArrayBasedMapData = {
+    if (keys.length != vals.length)
+      corrupt(s"$owner has ${keys.length} tag keys and ${vals.length} values")
+    new ArrayBasedMapData(
+      new GenericArrayData(keys.map(k => str(strings, k): Any)),
+      new GenericArrayData(vals.map(v => str(strings, v): Any)))
+  }
+
+  private def parseWay(w: ProtoReader, strings: Array[UTF8String],
+      dateGranularity: Long): InternalRow = {
+    var id = 0L
+    val keys, vals, refDeltas = longs()
+    var info = NoInfo
     while (w.hasNext) w.readTag() match {
       case (1, 0) => id = w.readVarint()
       case (2, 2) => keys ++= w.packedVarints()
-      case (2, 0) => keys :+= w.readVarint()
+      case (2, 0) => keys += w.readVarint()
       case (3, 2) => vals ++= w.packedVarints()
-      case (3, 0) => vals :+= w.readVarint()
-      case (4, 2) => // Info
-        val info = w.subReader()
-        while (info.hasNext) info.readTag() match {
-          case (1, 0) => version = Int.box(info.readVarint().toInt)
-          case (2, 0) => ts = tsMicros(info.readVarint(), dateGranularity)
-          case (3, 0) => changeset = Long.box(info.readVarint())
-          case (4, 0) => uid = Int.box(info.readVarint().toInt)
-          case (5, 0) =>
-            val sid = info.readVarint().toInt
-            if (sid != 0) userName = strings(sid)
-          case (6, 0) => visible = Boolean.box(info.readVarint() != 0L)
-          case (_, wt) => info.skip(wt)
-        }
+      case (3, 0) => vals += w.readVarint()
+      case (4, 2) => info = parseInfo(w.subReader(), strings, dateGranularity)
       case (8, 2) => refDeltas ++= w.packedSVarints()
-      case (8, 0) => refDeltas :+= w.readSVarint()
+      case (8, 0) => refDeltas += w.readSVarint()
       case (_, wt) => w.skip(wt)
     }
+    val (version, ts, changeset, uid, userName, visible) = info
     var acc = 0L
-    refs = refDeltas.map { d => acc += d; acc }
+    val refs = refDeltas.result().map { d => acc += d; acc }
     new GenericInternalRow(Array[Any](
       id, version, uid, ts, changeset,
-      new ArrayBasedMapData(
-        new GenericArrayData(keys.map(k => strings(k.toInt): Any)),
-        new GenericArrayData(vals.map(v => strings(v.toInt): Any))),
+      tagMap(s"way $id", keys.result(), vals.result(), strings),
       new GenericArrayData(refs), userName, visible))
   }
 
@@ -435,64 +544,43 @@ private[osmpbf] class PbfBlobReader(part: PbfBlobPartition, kind: String,
   private def parseRelation(r: ProtoReader, strings: Array[UTF8String],
       dateGranularity: Long): InternalRow = {
     var id = 0L
-    var keys = Array.empty[Long]
-    var vals = Array.empty[Long]
-    var roles = Array.empty[Long]
-    var memidDeltas = Array.empty[Long]
-    var types = Array.empty[Long]
-    var version: Any = null
-    var ts: Any = null
-    var changeset: Any = null
-    var uid: Any = null
-    var userName: Any = null
-    var visible: Any = Boolean.box(true)
+    val keys, vals, rolesB, memidDeltasB, typesB = longs()
+    var info = NoInfo
     while (r.hasNext) r.readTag() match {
       case (1, 0) => id = r.readVarint()
       case (2, 2) => keys ++= r.packedVarints()
-      case (2, 0) => keys :+= r.readVarint()
+      case (2, 0) => keys += r.readVarint()
       case (3, 2) => vals ++= r.packedVarints()
-      case (3, 0) => vals :+= r.readVarint()
-      case (4, 2) => // Info
-        val info = r.subReader()
-        while (info.hasNext) info.readTag() match {
-          case (1, 0) => version = Int.box(info.readVarint().toInt)
-          case (2, 0) => ts = tsMicros(info.readVarint(), dateGranularity)
-          case (3, 0) => changeset = Long.box(info.readVarint())
-          case (4, 0) => uid = Int.box(info.readVarint().toInt)
-          case (5, 0) =>
-            val sid = info.readVarint().toInt
-            if (sid != 0) userName = strings(sid)
-          case (6, 0) => visible = Boolean.box(info.readVarint() != 0L)
-          case (_, wt) => info.skip(wt)
-        }
-      case (8, 2) => roles ++= r.packedVarints()
-      case (8, 0) => roles :+= r.readVarint()
-      case (9, 2) => memidDeltas ++= r.packedSVarints()
-      case (9, 0) => memidDeltas :+= r.readSVarint()
-      case (10, 2) => types ++= r.packedVarints()
-      case (10, 0) => types :+= r.readVarint()
+      case (3, 0) => vals += r.readVarint()
+      case (4, 2) => info = parseInfo(r.subReader(), strings, dateGranularity)
+      case (8, 2) => rolesB ++= r.packedVarints()
+      case (8, 0) => rolesB += r.readVarint()
+      case (9, 2) => memidDeltasB ++= r.packedSVarints()
+      case (9, 0) => memidDeltasB += r.readSVarint()
+      case (10, 2) => typesB ++= r.packedVarints()
+      case (10, 0) => typesB += r.readVarint()
       case (_, wt) => r.skip(wt)
     }
+    val (version, ts, changeset, uid, userName, visible) = info
+    val roles = rolesB.result(); val memidDeltas = memidDeltasB.result()
+    val types = typesB.result()
+    if (types.length != memidDeltas.length)
+      corrupt(s"relation $id has ${types.length} member types for ${memidDeltas.length} members")
     val typeCodes = Array(UTF8String.fromString("N"), UTF8String.fromString("W"),
       UTF8String.fromString("R"))
     var acc = 0L
     val members = memidDeltas.indices.map { i =>
       acc += memidDeltas(i)
+      if (types(i) < 0 || types(i) > 2)
+        corrupt(s"relation $id member type ${types(i)} is not 0, 1 or 2")
       new GenericInternalRow(Array[Any](
         typeCodes(types(i).toInt),
         acc,
-        if (i < roles.length) strings(roles(i).toInt) else UTF8String.fromString("")))
+        if (i < roles.length) str(strings, roles(i)) else UTF8String.fromString("")))
     }
     new GenericInternalRow(Array[Any](
       id, version, uid, ts, changeset,
-      new ArrayBasedMapData(
-        new GenericArrayData(keys.map(k => strings(k.toInt): Any)),
-        new GenericArrayData(vals.map(v => strings(v.toInt): Any))),
+      tagMap(s"relation $id", keys.result(), vals.result(), strings),
       new GenericArrayData(members.toArray[Any]), userName, visible))
   }
-
-  private var current: InternalRow = _
-  override def next(): Boolean = { if (rows.hasNext) { current = rows.next(); true } else false }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
 }

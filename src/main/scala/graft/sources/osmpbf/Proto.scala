@@ -7,6 +7,11 @@ import java.nio.charset.StandardCharsets
   * to read and write the three OSM PBF message families
   * (fileformat.proto / osmformat.proto, wiki.openstreetmap.org/wiki/PBF_Format).
   * Hand-rolled because the build allows no new dependencies.
+  *
+  * Every read stays inside this reader's `[start, end)` window: a
+  * truncated varint, a length that runs past the window or an
+  * unsupported wire type throws [[PbfFormatException]] instead of
+  * reading into the neighbouring field.
   */
 final class ProtoReader(buf: Array[Byte], start: Int, end: Int) {
   def this(buf: Array[Byte]) = this(buf, 0, buf.length)
@@ -26,6 +31,8 @@ final class ProtoReader(buf: Array[Byte], start: Int, end: Int) {
     var result = 0L
     var b = 0
     do {
+      if (pos >= end) throw new PbfFormatException(s"truncated varint at byte $pos")
+      if (shift > 63) throw new PbfFormatException(s"varint longer than 10 bytes at byte $pos")
       b = buf(pos) & 0xFF
       pos += 1
       result |= (b & 0x7FL) << shift
@@ -41,10 +48,16 @@ final class ProtoReader(buf: Array[Byte], start: Int, end: Int) {
   }
 
   def readBytes(): (Int, Int) = { // (offset, length) view into buf
-    val len = readVarint().toInt
+    val len = readVarint()
     val off = pos
-    pos += len
-    (off, len)
+    advance(len)
+    (off, len.toInt)
+  }
+
+  private def advance(n: Long): Unit = {
+    if (n < 0 || n > end - pos)
+      throw new PbfFormatException(s"field of $n bytes at byte $pos overruns its ${end - pos}-byte window")
+    pos += n.toInt
   }
 
   def readString(): String = {
@@ -76,10 +89,10 @@ final class ProtoReader(buf: Array[Byte], start: Int, end: Int) {
   /** Skip a field of the given wire type. */
   def skip(wireType: Int): Unit = wireType match {
     case 0 => readVarint()
-    case 1 => pos += 8
-    case 2 => val (_, len) = readBytes()
-    case 5 => pos += 4
-    case other => throw new IllegalArgumentException(s"wire type $other")
+    case 1 => advance(8)
+    case 2 => readBytes()
+    case 5 => advance(4)
+    case other => throw new PbfFormatException(s"unsupported wire type $other at byte $pos")
   }
 }
 

@@ -4,6 +4,7 @@ import java.util
 
 import graft.model.OsmModel
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -13,6 +14,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 reader for OSM XML files (`.osm`) — the reference's S1
   * input surface (SURVEY.md §2.1; osmium parses PBF/XML, filter.py:260)
@@ -92,9 +94,7 @@ private[osmxml] class OsmXmlTable(schema: StructType, kind: String, paths: Seq[S
       override def build(): org.apache.spark.sql.connector.write.Write =
         new org.apache.spark.sql.connector.write.Write {
           override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-            new OsmXmlBatchWrite(kind, paths.head,
-              new graft.sources.SerializableHadoopConf(
-                org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
+            new OsmXmlBatchWrite(kind, paths.head, graft.sources.SessionConf.broadcast())
         }
     }
   }
@@ -123,21 +123,19 @@ private[osmxml] class OsmXmlTable(schema: StructType, kind: String, paths: Seq[S
         }.toArray
       }
       override def createReaderFactory(): PartitionReaderFactory =
-        new OsmXmlReaderFactory(kind, schema, required,
-          new graft.sources.SerializableHadoopConf(
-            org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
+        new OsmXmlReaderFactory(kind, schema, required, graft.sources.SessionConf.broadcast())
     }
 }
 
 private[osmxml] case class OsmXmlPartition(path: String) extends InputPartition
 
 private[osmxml] class OsmXmlReaderFactory(kind: String, full: StructType,
-    required: StructType, conf: graft.sources.SerializableHadoopConf)
+    required: StructType, conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     graft.sources.Pruning.project(
       new OsmXmlPartitionReader(partition.asInstanceOf[OsmXmlPartition].path, kind,
-        conf.value),
+        conf.value.value),
       full, required)
 }
 

@@ -1,8 +1,10 @@
 package graft.sources.osmxml
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Write-side of the `osm-xml` source: streams OSM XML 0.6 documents,
   * one file per task. Rows arrive in the source schemas
@@ -10,7 +12,7 @@ import org.apache.spark.sql.connector.write._
   * (OSM XML's own optionality); `visible` is written only when false.
   */
 private[osmxml] class OsmXmlBatchWrite(kind: String, dir: String,
-    conf: graft.sources.SerializableHadoopConf) extends BatchWrite {
+    conf: Broadcast[SerializableConfiguration]) extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new OsmXmlWriterFactory(kind, dir, conf)
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
@@ -18,9 +20,9 @@ private[osmxml] class OsmXmlBatchWrite(kind: String, dir: String,
 }
 
 private[osmxml] class OsmXmlWriterFactory(kind: String, dir: String,
-    conf: graft.sources.SerializableHadoopConf) extends DataWriterFactory {
+    conf: Broadcast[SerializableConfiguration]) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new OsmXmlDataWriter(kind, dir, partitionId, taskId, conf.value)
+    new OsmXmlDataWriter(kind, dir, partitionId, taskId, conf.value.value)
 }
 
 private[osmxml] case class XmlCommitMessage(path: String) extends WriterCommitMessage

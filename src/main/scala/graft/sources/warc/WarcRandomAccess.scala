@@ -247,8 +247,7 @@ object WarcRandomAccess {
     */
   def fetch(index: DataFrame): Dataset[FetchedRecord] = {
     import index.sparkSession.implicits._
-    val conf = new graft.sources.SerializableHadoopConf(
-      index.sparkSession.sessionState.newHadoopConf())
+    val conf = graft.sources.SessionConf.broadcast(index.sparkSession)
     index.select(col("segment"), col("offset"), col("length"))
       // corrupt index rows (null offset/length from try_cast) are
       // unfetchable by definition — skip instead of NPE-ing the task
@@ -258,7 +257,7 @@ object WarcRandomAccess {
       .sortWithinPartitions(col("segment"), col("offset"))
       .as[(String, Long, Long)]
       .mapPartitions { it =>
-        val c = conf.value
+        val c = conf.value.value
         var curPath: String = null
         var stream: org.apache.hadoop.fs.FSDataInputStream = null
         def close(): Unit =

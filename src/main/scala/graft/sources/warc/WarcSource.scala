@@ -3,6 +3,7 @@ package graft.sources.warc
 import java.util
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -11,6 +12,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 reader/writer for WARC (Web ARChive, ISO 28500) files
   * — the container format web crawls actually ship in (Common Crawl,
@@ -37,7 +39,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * pruning projects the decoded record to the scan's required columns
   * ([[graft.sources.Pruning]]); a payload-less metadata scan still
   * reads the bytes (the framing requires it) but never materializes
-  * them into Spark rows.
+  * them into Spark rows. The reader and writer factories (batch and
+  * micro-batch) hold the session's Hadoop conf as one broadcast per
+  * scan or write ([[graft.sources.SessionConf]]); the conf itself is
+  * not serialized into each task.
   */
 class WarcSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "warc"
@@ -84,9 +89,7 @@ private[warc] class WarcTable(schema: StructType, paths: Seq[String])
       override def build(): org.apache.spark.sql.connector.write.Write =
         new org.apache.spark.sql.connector.write.Write {
           override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-            new WarcBatchWrite(paths.head, in, gz, idx,
-              new graft.sources.SerializableHadoopConf(
-                org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
+            new WarcBatchWrite(paths.head, in, gz, idx, graft.sources.SessionConf.broadcast())
         }
     }
   }
@@ -118,14 +121,11 @@ private[warc] class WarcTable(schema: StructType, paths: Seq[String])
         }.toArray
       }
       override def createReaderFactory(): PartitionReaderFactory =
-        new WarcReaderFactory(WarcSource.schema, required,
-          new graft.sources.SerializableHadoopConf(
-            org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
+        new WarcReaderFactory(WarcSource.schema, required, graft.sources.SessionConf.broadcast())
       override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
         new WarcMicroBatchStream(paths, checkpointLocation, required,
-          new graft.sources.SerializableHadoopConf(
-            org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()))
+          graft.sources.SessionConf.broadcast())
     }
 }
 
@@ -152,7 +152,7 @@ private[warc] class WarcTable(schema: StructType, paths: Seq[String])
   */
 private[warc] class WarcMicroBatchStream(paths: Seq[String],
     checkpointLocation: String, required: StructType,
-    conf: graft.sources.SerializableHadoopConf)
+    conf: Broadcast[SerializableConfiguration])
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
@@ -161,7 +161,7 @@ private[warc] class WarcMicroBatchStream(paths: Seq[String],
   }
 
   private val logPath = new Path(checkpointLocation, "graft-warc-file-log")
-  private val fs = logPath.getFileSystem(conf.value)
+  private val fs = logPath.getFileSystem(conf.value.value)
   private val seen: scala.collection.mutable.ArrayBuffer[String] = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
     if (fs.exists(logPath)) {
@@ -178,7 +178,7 @@ private[warc] class WarcMicroBatchStream(paths: Seq[String],
 
   private def discover(): Seq[String] = paths.flatMap { p =>
     val hp = new Path(p)
-    val pfs = hp.getFileSystem(conf.value)
+    val pfs = hp.getFileSystem(conf.value.value)
     val stats = pfs.globStatus(hp) match {
       case null => Array.empty[org.apache.hadoop.fs.FileStatus]
       case gs => gs.flatMap { s =>
@@ -237,10 +237,10 @@ private[warc] class WarcMicroBatchStream(paths: Seq[String],
 private[warc] case class WarcPartition(path: String) extends InputPartition
 
 private[warc] class WarcReaderFactory(full: StructType, required: StructType,
-    conf: graft.sources.SerializableHadoopConf) extends PartitionReaderFactory {
+    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     graft.sources.Pruning.project(
-      new WarcPartitionReader(partition.asInstanceOf[WarcPartition].path, conf.value),
+      new WarcPartitionReader(partition.asInstanceOf[WarcPartition].path, conf.value.value),
       full, required)
 }
 

@@ -1,9 +1,11 @@
 package graft.sources.warc
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 /** Write side of the `warc` source: one `.warc` (or `.warc.gz`) file
   * per task. Rows arrive in any schema containing `payload binary`;
@@ -23,7 +25,7 @@ import org.apache.spark.sql.types.StructType
   */
 private[warc] class WarcBatchWrite(dir: String, in: StructType, gzip: Boolean,
     index: Boolean,
-    conf: graft.sources.SerializableHadoopConf) extends BatchWrite {
+    conf: Broadcast[SerializableConfiguration]) extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new WarcWriterFactory(dir, in, gzip, index, conf)
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
@@ -32,9 +34,9 @@ private[warc] class WarcBatchWrite(dir: String, in: StructType, gzip: Boolean,
 
 private[warc] class WarcWriterFactory(dir: String, in: StructType, gzip: Boolean,
     index: Boolean,
-    conf: graft.sources.SerializableHadoopConf) extends DataWriterFactory {
+    conf: Broadcast[SerializableConfiguration]) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new WarcDataWriter(dir, in, gzip, index, partitionId, taskId, conf.value)
+    new WarcDataWriter(dir, in, gzip, index, partitionId, taskId, conf.value.value)
 }
 
 private[warc] case class WarcCommitMessage(path: String) extends WriterCommitMessage
