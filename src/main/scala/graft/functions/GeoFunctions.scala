@@ -257,9 +257,6 @@ object GeoFunctions {
   private val centroidUdf = udf((ring: Seq[Row]) =>
     centroidLonLat(rowRing(ring)).map { case (x, y) => CentroidPt(x, y) })
 
-  private val centroidLonUdf = udf((ring: Seq[Row]) => centroidLonLat(rowRing(ring)).map(_._1))
-  private val centroidLatUdf = udf((ring: Seq[Row]) => centroidLonLat(rowRing(ring)).map(_._2))
-
   private val centroidWkbUdf = udf((ring: Seq[Row]) =>
     centroidLonLat(rowRing(ring)).map { case (x, y) => wkbPointBytes(x, y) })
 
@@ -313,14 +310,10 @@ object GeoFunctions {
   def wkb_multipolygon_areas(outers: Column, inners: Column): Column =
     wkbAreasUdf(ringsAsDoubles(outers), ringsAsDoubles(inners))
 
-  /** C8 — ST_Centroid as decomposed lon/lat (oracle-friendly) or WKB.
-    * `centroid` returns one struct<lon,lat> per call — prefer it when
-    * both coordinates are needed (a single shoelace pass; separate
-    * lon/lat columns would each re-walk the ring).
+  /** C8 — ST_Centroid as a struct<lon,lat> (oracle-friendly) or WKB;
+    * one shoelace pass yields both coordinates.
     */
   def centroid(ring: Column): Column = centroidUdf(ring)
-  def centroid_lon(ring: Column): Column = centroidLonUdf(ring)
-  def centroid_lat(ring: Column): Column = centroidLatUdf(ring)
   def centroid_wkb(ring: Column): Column = centroidWkbUdf(ring)
 
   /** C9 — ST_Area(geom::geography) on the sphere, m²; null if invalid. */

@@ -42,10 +42,7 @@ object HstoreCompat {
     * meaning).
     */
   def tagsAsHstore(tags: Column, trimTags: Seq[String] = Nil): Column = {
-    val trimmed =
-      if (trimTags.isEmpty) tags
-      else map_filter(tags, (k, _) => !k.isin(trimTags.map(x => x: Any): _*))
-    val entries = sort_array(map_entries(trimmed))
+    val entries = sort_array(map_entries(TagMatch.trimTags(tags, trimTags)))
     concat_ws(",", transform(entries, e =>
       concat(lit("\""), sanitize(e.getField("key")), lit("\"=>\""),
         sanitize(e.getField("value")), lit("\""))))

@@ -27,14 +27,4 @@ object SpatialCell {
     val yc = least(floor((lat + 90.0) / cellDeg), lit(nrows - 1)).cast("long")
     yc * ncols + xc
   }
-
-  /** Repartition by spatial cell and sort within partitions — the
-    * write-side layout that makes per-region scans prune.
-    */
-  def layoutByCell(df: org.apache.spark.sql.DataFrame, lonCol: String,
-      latCol: String, cellDeg: Double, numPartitions: Int): org.apache.spark.sql.DataFrame = {
-    val withCell = df.withColumn("__cell", cellId(col(lonCol), col(latCol), cellDeg))
-    withCell.repartition(numPartitions, col("__cell"))
-      .sortWithinPartitions(col("__cell"))
-  }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.map_filter
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
@@ -107,4 +108,12 @@ object TagMatch {
   /** Column-API entry point for the F4/J1 probe. */
   def tagsAnyMatch(tags: Column, pairs: Seq[(String, String)]): Column =
     Bridge.column(TagsAnyMatch(Bridge.expression(tags), pairs))
+
+  /** F9 — the tag map without the `keys` (reference TRIM_TAGS,
+    * filter.py:102-111). An empty list returns `tags` itself, so the
+    * untrimmed plan carries no `map_filter`.
+    */
+  def trimTags(tags: Column, keys: Seq[String]): Column =
+    if (keys.isEmpty) tags
+    else map_filter(tags, (k, _) => !k.isin(keys.map(x => x: Any): _*))
 }

@@ -132,7 +132,7 @@ object Dedup {
     * `maxShingleDf`² when the cap is set.
     *
     * THE CAP IS LOSSY ON ZIPF CORPORA — measured, not hypothetical
-    * (SkewGen/SkewProbe, round-10 BASELINE.md): a pruned posting's
+    * (SkewGen corpus, BASELINE.md round 10): a pruned posting's
     * shingle vanishes from the INTERSECTION count but stays in both
     * docs' set sizes, so every pair sharing hot shingles has its
     * Jaccard underestimated — even EXACT DUPLICATES can drop below
@@ -334,7 +334,7 @@ object Dedup {
     * ahead of grouped+cap in BOTH regimes (14.0–26.2 s lossy / 18.5 s
     * after ITS hash rewrite) while staying exact.
     *
-    * Measured on SkewProbe's SkewGen Zipf corpus (510k docs, hot
+    * Measured on the SkewGen Zipf corpus (BASELINE.md round 10; 510k docs, hot
     * shingles at df ≈ 255k, 32 threads): 30343 pairs — 27 MORE than
     * the pre-round-10 "exact" figure, recovered by the IEEE
     * prefix-length fix below — vs grouped+cap missing 16.7% of true
@@ -902,16 +902,9 @@ object Dedup {
     * but equality of BOTH to the previous round means the canonical
     * edge set is stable.
     */
-  /** @param eagerCheckpoint A/B instrument for the per-round
-    *        localCheckpoint mode: false (default) folds checkpoint
-    *        materialization into the witness aggregate (one job/round);
-    *        true materializes eagerly first (two jobs/round) — the
-    *        pre-round-10 behavior, kept so the fold's cost claim stays
-    *        measurable (SkewProbe `ccab`).
-    */
   def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
       idOut: String = "id", compOut: String = "component",
-      maxIter: Int = 30, eagerCheckpoint: Boolean = false): DataFrame = {
+      maxIter: Int = 30): DataFrame = {
     def canon(df: DataFrame): DataFrame = df
       .filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
@@ -983,9 +976,9 @@ object Dedup {
       // count() job), so making the witness aggregate the FIRST action
       // on the checkpoint-marked RDD materializes + caches the round's
       // partitions and computes the witness in ONE job — halving the
-      // loop's jobs/round vs eager-checkpoint-then-aggregate
-      // (eagerCheckpoint = true restores the two-job form for A/B)
-      val next = smallStar(largeStar(e)).localCheckpoint(eagerCheckpoint)
+      // loop's jobs/round vs eager-checkpoint-then-aggregate (the two
+      // forms timed a wash on the 10k-doc chain, BASELINE.md rounds 11–12)
+      val next = smallStar(largeStar(e)).localCheckpoint(false)
       val w2 = witness(next)
       e.unpersist()
       e = next
@@ -1103,8 +1096,8 @@ object Dedup {
     * collision chance (two distinct spans sharing a hash would share
     * stats) — the same trade [[minhashBands]] makes.
     *
-    * Skew-probed on the real-world worst case (round-12 SkewProbe
-    * `linededup`: 510k docs where ONE boilerplate span has df 249,852 ≈
+    * Skew-probed on the real-world worst case (BASELINE.md rounds
+    * 11–12, `linededup`: 510k docs where ONE boilerplate span has df 249,852 ≈
     * N/2 — boilerplate IS the Zipf head): 5.5 s wall / 2.2 s max task
     * warm at local[32]. The count side is immune (partial aggregation),
     * and the span⋈stats equi-join survives the hot key because the
@@ -1369,8 +1362,8 @@ object Dedup {
     // share every LSH band / IVF cell, so a mass of C identical vectors
     // (a failed-decode default embedding, an empty-doc vector — every
     // production embedding table has such a head) would push a C²/2
-    // candidate clique through the verify join. Measured (round-12
-    // SkewProbe `semantic`, 200k vectors with a 25% identical mass):
+    // candidate clique through the verify join. Measured (BASELINE.md
+    // rounds 11–12, `semantic`, 200k vectors with a 25% identical mass):
     // the collapsed path runs in seconds where the uncollapsed clique
     // is ~1.2e9 candidate pairs — structurally unrunnable. One
     // partial-aggregated groupBy on a 64-bit vector hash picks the

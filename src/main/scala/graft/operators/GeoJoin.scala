@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
   * fraction of any real corpus at one exact coordinate, and those
   * points are all GENUINELY within radius of each other: a C²/2
   * output clique no candidate stage can bound (the geo twin of the
-  * mirror family's parking page). Decision rule, MEASURED (SkewProbe
-  * `geojoin`, BASELINE r15): collapse identical coordinates first —
+  * mirror family's parking page). Decision rule, MEASURED (the
+  * `geojoin` family, BASELINE.md round 15): collapse identical coordinates first —
   * `groupBy(lon, lat).agg(min(id), count)` and join pairs over
   * representatives; the 5000-point clique that materializes 12.5M
   * raw pairs becomes ONE multiplicity row while the 25 true
@@ -282,7 +282,7 @@ object GeoJoin {
     * fan-out. Size it near the MEDIAN polygon diameter. A whale
     * polygon (a country among buildings) emits bbox-area/cellDeg²
     * keys — but that fan-out is what SHARDS its verify work across
-    * the cluster, measured, not argued (SkewProbe `geojoin` pip1m:
+    * the cluster, measured, not argued (BASELINE.md round 15 `geojoin` pip1m:
     * 1M points × 100k small polys + one continent-bbox whale at
     * cellDeg 0.5 → 865k genuine containments in 1.6 s, maxtask
     * 0.5 s — the whale distributes by construction). The real limit

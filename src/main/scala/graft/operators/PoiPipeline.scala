@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TagMatch
 import graft.model.{OsmModel, PoiSettings}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -34,6 +35,11 @@ object PoiPipeline {
   private def dimensionPairs(dim: DataFrame, settings: PoiSettings): Seq[(String, String)] =
     TagDimension.toPairs(TagDimension.prepare(dim, settings), settings)
 
+  /** F9 on a classified relation's own `tags` column. */
+  private def trimmed(df: DataFrame, settings: PoiSettings): DataFrame =
+    if (settings.trimTags.isEmpty) df
+    else df.withColumn("tags", TagMatch.trimTags(col("tags"), settings.trimTags))
+
   private def runPairs(nodes: DataFrame, ways: DataFrame, pairs: Seq[(String, String)],
       settings: PoiSettings): Result = {
     // A2 — progress instrumentation: the reference logs a line per 1M
@@ -54,10 +60,7 @@ object PoiPipeline {
         PoiProjector.splitInvalid(PoiProjector.projectWays(classifiedWays, settings))
       // ways_to_centroids.sql post-process over the projected ways
       // relation: trim applies to its tags too (F9 happens at project)
-      val trimmedWays =
-        if (settings.trimTags.isEmpty) classifiedWays
-        else classifiedWays.withColumn("tags", map_filter(col("tags"),
-          (k, _) => !k.isin(settings.trimTags.map(x => x: Any): _*)))
+      val trimmedWays = trimmed(classifiedWays, settings)
       val centroids = WaysToCentroids.centroidRows(
         trimmedWays, OsmModel.CentroidAreaThreshold)
       Result(poiNodes, poiWays,
@@ -86,11 +89,7 @@ object PoiPipeline {
     else {
       val areas = RelationAssembly.relationAreas(relations, wayPaths)
       val classified = PoiClassifier.classify(areas, pairs, settings)
-      val trimmed =
-        if (settings.trimTags.isEmpty) classified
-        else classified.withColumn("tags", map_filter(col("tags"),
-          (k, _) => !k.isin(settings.trimTags.map(x => x: Any): _*)))
-      val (goodAreas, badAreas) = PoiProjector.splitInvalid(trimmed)
+      val (goodAreas, badAreas) = PoiProjector.splitInvalid(trimmed(classified, settings))
       base.copy(ways = base.ways.unionByName(goodAreas),
         invalidWays = base.invalidWays.unionByName(badAreas))
     }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.GeoFunctions
+import graft.functions.{GeoFunctions, TagMatch}
 import graft.model.PoiSettings
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -17,9 +17,7 @@ import org.apache.spark.sql.functions._
 object PoiProjector {
 
   private def trimTags(settings: PoiSettings) =
-    if (settings.trimTags.isEmpty) col("tags")
-    else map_filter(col("tags"),
-      (k, _) => !k.isin(settings.trimTags.map(x => x: Any): _*)) // F9
+    TagMatch.trimTags(col("tags"), settings.trimTags) // F9
 
   /** Nodes: C3 point geometry from lon/lat. C5 id choice is structural
     * (nodes carry their own id; filter.py:142-144).
@@ -42,20 +40,6 @@ object PoiProjector {
       col("changeset_id"),
       trimTags(settings).as("tags"),
       GeoFunctions.wkb_multipolygon(col("ring")).as("geom"))
-
-  /** pgsnapshot `ways.linestring` (schema.sql:194): every way with ≥ 2
-    * resolved points carries linestring geometry — the path for roads
-    * (most of OSM), which never close into areas. Closed rings produce a
-    * closed linestring, exactly as Osmosis stores them; this is a
-    * SEPARATE column from the area multipolygon ([[projectWays]]), not a
-    * fallback — matching the reference's two-geometry way row.
-    */
-  def projectWayLinestrings(classified: DataFrame, settings: PoiSettings): DataFrame =
-    classified.select(
-      col("id"), col("version"), col("user_id"), col("tstamp"),
-      col("changeset_id"),
-      trimTags(settings).as("tags"),
-      GeoFunctions.wkb_linestring(col("ring")).as("geom"))
 
   /** F6 — split valid rows from the invalid-geometry dead-letter branch
     * (reference records invalid ids and excludes them,

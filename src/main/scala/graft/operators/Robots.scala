@@ -233,9 +233,6 @@ object Robots {
     relationalVerdicts(urls, urlCol, compileWildcardRules(rules),
       regexp_like(col("__path"), col("re")))
 
-  def filterAllowedWildcard(urls: DataFrame, urlCol: String, rules: DataFrame): DataFrame =
-    verdictsWildcard(urls, urlCol, rules).filter(col("allowed")).drop("allowed")
-
   /** Zero-shuffle, streaming-safe verdicts: the rule set (bounded —
     * O(hosts), the same contract that lets [[verdicts]] broadcast)
     * collects ONCE at plan build into a host → pre-sorted-rules map
@@ -264,9 +261,6 @@ object Robots {
   def verdictsWildcardLit(urls: DataFrame, urlCol: String, rules: DataFrame): DataFrame =
     litVerdicts(urls, urlCol, collectByHost(rules, wildcardRegex),
       (path, r) => regexp_like(path, r.getField("prefix")))
-
-  def filterAllowedWildcardLit(urls: DataFrame, urlCol: String, rules: DataFrame): DataFrame =
-    verdictsWildcardLit(urls, urlCol, rules).filter(col("allowed")).drop("allowed")
 
   /** Collect the bounded rule set host→rules, RFC-sorted (original
     * pattern OCTETS — UTF-8 bytes, matching the relational forms'

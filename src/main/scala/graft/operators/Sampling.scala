@@ -80,7 +80,7 @@ object Sampling {
     * gets Catalyst's WindowGroupLimit pushdown (partial BEFORE the
     * stratum shuffle + final), so each map partition pre-prunes to its
     * own top n and the giant stratum never ships or sorts its full row
-    * set — measured skew-IMMUNE on a 4.6M-row stratum (SkewProbe,
+    * set — measured skew-IMMUNE on a 4.6M-row stratum (SkewGen,
     * round-10 BASELINE.md: max task 0.34 s plain vs 0.41 s salted).
     * [[stratifiedByHashSalted]] remains the pattern for keyed-window
     * shapes the pushdown does NOT match (running aggregates like
@@ -169,7 +169,7 @@ object Sampling {
     * partitioning. One keyed window; the giant-stratum caveat applies
     * WITH FORCE here — a running aggregate gets no WindowGroupLimit
     * pushdown, so every row of the stratum flows through one task's
-    * sort. Measured on a 4.6M-row stratum of 5M docs (SkewProbe,
+    * sort. Measured on a 4.6M-row stratum of 5M docs (SkewGen,
     * round-10 BASELINE.md): 11.7–16.3 s wall with an 11.4–12.9 s max
     * task here vs 1.7–4.0 s / 1.0–1.7 s max task for
     * [[packLayoutSalted]] — 7× wall-clock, 11× slowest-task. Use the
@@ -439,7 +439,7 @@ object Sampling {
     * Scale shape: the component labeling is bounded by the docs that
     * appear in some pair (|dup candidates|, not |corpus|), so the one
     * join is small-side broadcast-able; the hash carve-up is narrow.
-    * Skew-probed on the chain corpus (round-12 SkewProbe `split`:
+    * Skew-probed on the chain corpus (BASELINE.md rounds 11–12, `split`:
     * 510k docs, a 10k-doc near-dup CHAIN as the pair graph): 0.4–0.5 s
     * wall end-to-end, and the chain collapses into ONE group_id that
     * routes ALL 10k members to a single split (measured train/val/test

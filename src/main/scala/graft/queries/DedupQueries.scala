@@ -184,7 +184,7 @@ object DedupQueries {
     // The heavy-head scale path against the SAME exact oracle: prefix
     // filtering never drops a true pair no matter how hot the shingle
     // head (hot shingles sort LAST in the df order and fall out of the
-    // prefixes). SkewProbe-measured crossover on a Zipf corpus (10
+    // prefixes). Measured crossover on the SkewGen Zipf corpus (10
     // stop-words prepended to half the docs, round-10 BASELINE.md):
     // grouped+cap runs ~2x faster but silently loses 12-17% of true
     // pairs — including exact duplicates — while prefix stays exact.

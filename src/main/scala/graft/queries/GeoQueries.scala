@@ -290,7 +290,7 @@ object GeoQueries {
     // reproduce the naive strict-between oracle exactly. Single-pass
     // at this cellDeg emits 36 key rows per big way (fan-out cost);
     // auto bounds it at maxCellsPerPoly while keeping exactness —
-    // the measured degradation case lives in SkewProbe (pipwhale).
+    // the measured degradation case is BASELINE.md round 16 (pipwhale).
     Q("poi_in_way_area_auto",
       (s, dir) => {
         import graft.operators.GeoJoin

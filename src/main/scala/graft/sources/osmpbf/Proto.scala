@@ -9,9 +9,9 @@ import java.nio.charset.StandardCharsets
   * Hand-rolled because the build allows no new dependencies.
   *
   * Every read stays inside this reader's `[start, end)` window: a
-  * truncated varint, a length that runs past the window or an
-  * unsupported wire type throws [[PbfFormatException]] instead of
-  * reading into the neighbouring field.
+  * truncated varint, a length that runs past the window, field number
+  * 0 or an unsupported wire type throws [[PbfFormatException]] instead
+  * of reading into the neighbouring field.
   */
 final class ProtoReader(buf: Array[Byte], start: Int, end: Int) {
   def this(buf: Array[Byte]) = this(buf, 0, buf.length)
@@ -20,9 +20,14 @@ final class ProtoReader(buf: Array[Byte], start: Int, end: Int) {
 
   def hasNext: Boolean = pos < end
 
-  /** Returns (fieldNumber, wireType) of the next tag. */
+  /** Returns (fieldNumber, wireType) of the next tag. Field number 0 is
+    * invalid on the wire: refusing it stops a run of zero bytes from
+    * "decoding" as millions of empty fields.
+    */
   def readTag(): (Int, Int) = {
+    val at = pos
     val tag = readVarint().toInt
+    if ((tag >>> 3) == 0) throw new PbfFormatException(s"field number 0 at byte $at")
     (tag >>> 3, tag & 7)
   }
 

@@ -33,7 +33,11 @@ import org.apache.spark.sql.functions._
   *
   * All selections are murmur3-hash functions of the row id — no RNG,
   * same corpus on every run. Stress-timing only; the DuckDB oracle
-  * gate stays on the driver's own sf0.01.
+  * gate stays on the harness's own sf0.01. To time a plain form against
+  * its skew-safe twin, run both catalog anchors on the output:
+  * `QueryTime <dstDir> events_asof_join events_asof_join_salted`
+  * (BASELINE.md lists every anchor pair with the section that recorded
+  * its result).
   *
   * usage: SkewGen <srcSfDir> <dstDir> [chainLen=10000]
   */

@@ -65,4 +65,17 @@ class PoiPipelineSpec extends SparkSpec {
         map_contains_key(col("tags"), "name"))
       .count() == 0)
   }
+
+  test("trimTags (F9) strips keys from relation areas too; an empty list is the identity") {
+    val r = PoiPipeline.runWithRelations(
+      Tables.osmNodes(spark, sf()), Tables.osmWays(spark, sf()),
+      Tables.osmRelations(spark, sf()), Tables.osmRelationWays(spark, sf()),
+      Tables.classificationDimDf(spark), settings.copy(trimTags = Seq("type")))
+    assert(r.ways.count() > 0)
+    assert(r.ways.union(r.invalidWays)
+      .filter(map_contains_key(col("tags"), "type")).count() == 0)
+    // the untrimmed plan carries no map_filter
+    val tags = col("tags")
+    assert(graft.functions.TagMatch.trimTags(tags, Nil) eq tags)
+  }
 }

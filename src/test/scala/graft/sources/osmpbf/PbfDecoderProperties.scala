@@ -85,6 +85,37 @@ object PbfDecoderProperties extends Properties("graft.pbf") {
     forAllNoShrink(blockGen, mutationGen) { case ((kind, frame), (truncate, cut, flips)) =>
       decodesOrNamed(kind, rawBlob(mutate(blobs(frame)._2, truncate, cut, flips)))
     }
+
+  /** The DenseNodes parallel arrays: the path to each packed field from
+    * DenseNodes, and the name the decoder reports it under.
+    */
+  private val parallelFields = Seq(
+    Seq(8) -> "DenseNodes.lat", Seq(9) -> "DenseNodes.lon",
+    Seq(5, 1) -> "DenseInfo.version", Seq(5, 2) -> "DenseInfo.timestamp",
+    Seq(5, 3) -> "DenseInfo.changeset", Seq(5, 4) -> "DenseInfo.uid",
+    Seq(5, 5) -> "DenseInfo.user_sid", Seq(5, 6) -> "DenseInfo.visible")
+
+  private val shortenedGen = for {
+    n <- Gen.chooseNum(2, 12)
+    seed <- Gen.long
+    field <- Gen.oneOf(parallelFields)
+    keep <- Gen.chooseNum(1, n - 1)
+  } yield (n, seed, field._1, field._2, keep)
+
+  // Random flips almost never yield a well-formed block with one short
+  // array, so this builds one: a valid block re-encoded with the first
+  // `keep` entries of one packed field. PrimitiveBlock field 2 is the
+  // group, group field 2 its DenseNodes.
+  property("a DenseNodes block with one short parallel array fails named") =
+    forAllNoShrink(shortenedGen) { case (n, seed, path, name, keep) =>
+      val block = blobs(OsmPbfEncoder.encodeBlock("nodes",
+        rows("nodes", n, new scala.util.Random(seed))))._2
+      val short = rewrite(block, Seq(2, 2) ++ path)(keepVarints(_, keep))
+      val outcome =
+        try { bounded(new PbfBlobDecoder("nodes", "fuzz:0").decode(rawBlob(short)).size); "decoded" }
+        catch { case e: PbfFormatException => e.getMessage }
+      Prop(outcome.contains(s"$name has $keep entries for $n ids")) :| outcome
+    }
 }
 
 /** Entity rows and blob plumbing shared by the decoder specs. */
@@ -146,6 +177,37 @@ private[osmpbf] object PbfFixtures {
     while (!inf.finished()) out.write(buf, 0, inf.inflate(buf))
     inf.end()
     (blob, out.toByteArray)
+  }
+
+  /** `message` with the length-delimited field at `path` replaced by
+    * `f` of its bytes, every enclosing message re-encoded. The encoder
+    * writes only varint and length-delimited fields.
+    */
+  def rewrite(message: Array[Byte], path: Seq[Int])(f: Array[Byte] => Array[Byte]): Array[Byte] = {
+    val r = new ProtoReader(message)
+    val w = new ProtoWriter
+    var done = false
+    while (r.hasNext) r.readTag() match {
+      case (field, 0) => w.varintField(field, r.readVarint())
+      case (field, 2) =>
+        val (o, l) = r.readBytes()
+        val bytes = message.slice(o, o + l)
+        if (field == path.head && !done) {
+          done = true
+          w.bytesField(field, if (path.tail.isEmpty) f(bytes) else rewrite(bytes, path.tail)(f))
+        } else w.bytesField(field, bytes)
+      case (field, wt) => throw new IllegalArgumentException(s"field $field has wire type $wt")
+    }
+    require(done, s"no field ${path.head} to rewrite")
+    w.toByteArray
+  }
+
+  /** The first `k` varints of a packed field (zigzag or not). */
+  def keepVarints(packed: Array[Byte], k: Int): Array[Byte] = {
+    val r = new ProtoReader(packed)
+    val w = new ProtoWriter
+    (1 to k).foreach(_ => w.writeVarint(r.readVarint()))
+    w.toByteArray
   }
 
   /** A Blob carrying `block` uncompressed (field 1, `raw`). */

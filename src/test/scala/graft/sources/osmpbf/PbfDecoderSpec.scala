@@ -47,9 +47,18 @@ class PbfDecoderSpec extends AnyFunSuite {
   test("an undeclared size never grows the inflate buffer past 32 MiB") {
     val bomb = zlibBlob(deflated(new Array[Byte](PbfBlobDecoder.MaxRawBlobSize + 1)))
     assert(refused("nodes", bomb).getMessage.contains("inflates past"))
-    // exactly at the limit still inflates (zeros parse as empty fields)
+    // exactly at the limit still inflates; its zero bytes then fail as
+    // field number 0, not as an oversize blob
     val atLimit = zlibBlob(deflated(new Array[Byte](PbfBlobDecoder.MaxRawBlobSize)))
-    assert(decode("nodes", atLimit) == 0)
+    val e = refused("nodes", atLimit)
+    assert(e.getMessage.contains("field number 0 at byte 0"))
+    assert(!e.getMessage.contains("inflates past"))
+  }
+
+  test("protobuf field number 0 fails named at its byte") {
+    val valid = new ProtoWriter().stringField(17, "x").toByteArray
+    assert(refused("ways", rawBlob(valid ++ Array[Byte](0)))
+      .getMessage.contains(s"blob.osm.pbf:1234: field number 0 at byte ${valid.length}"))
   }
 
   test("DenseNodes lat/lon or info arrays shorter than ids fail named") {

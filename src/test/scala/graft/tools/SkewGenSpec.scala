@@ -4,8 +4,9 @@ import graft.SparkSpec
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
 
-/** Pins the invariants the SkewGen/SkewProbe stress results depend on
-  * (round-10 BASELINE.md), at test scale:
+/** Pins the invariants the SkewGen stress results (round-10
+  * BASELINE.md, re-timed with QueryTime on the catalog anchor pairs)
+  * depend on, at test scale:
   *
   *   1. the sliding-window chain construction really produces a simple
   *      path at threshold 0.8 (consecutive docs pair, skip-level docs
