@@ -99,6 +99,13 @@ object Bench {
     // pays to unpack its task binary (RDD lineage, reader and writer
     // factories) before it runs
     val deserMs, tasks = new AtomicLong(0L)
+    // jobs per query: eager probes, schema inference, checkpoints and
+    // memo materialization each start one before or besides the
+    // query's own execution
+    val jobs = new AtomicLong(0L)
+    override def onJobStart(
+        js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      jobs.incrementAndGet(): Unit
     override def onTaskEnd(
         te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
       tasks.incrementAndGet()
@@ -124,7 +131,7 @@ object Bench {
       }
     }
     def reset(): Unit = Seq(memSpill, diskSpill, gcMs, shufWrite, input,
-      peakExec, maxTaskMs, evictDrop, evictDisk, deserMs, tasks).foreach(_.set(0L))
+      peakExec, maxTaskMs, evictDrop, evictDisk, deserMs, tasks, jobs).foreach(_.set(0L))
     /** One compact JSON object; bytes reported as integer MB. */
     def json(storePreMb: Long, storePostMb: Long,
         allocGb: Double = Double.NaN): String = {
@@ -138,7 +145,7 @@ object Bench {
         s""""gc_s":${gcMs.get / 1e3},"peak_exec_mb":${mb(peakExec.get)},""" +
         s""""shuf_w_mb":${mb(shufWrite.get)},"input_mb":${mb(input.get)},""" +
         s""""maxtask_s":${maxTaskMs.get / 1e3},""" + alloc +
-        s""""deser_s":${deserMs.get / 1e3},"tasks":${tasks.get},""" +
+        s""""deser_s":${deserMs.get / 1e3},"jobs":${jobs.get},"tasks":${tasks.get},""" +
         s""""evict_drop":${evictDrop.get},"evict_disk":${evictDisk.get},""" +
         s""""store_pre_mb":$storePreMb,"store_post_mb":$storePostMb}"""
     }

@@ -52,7 +52,8 @@ object QueryMemo {
   /** The materialized result of `build`, computed and written at most
     * once per JVM per `key` (atomic via TrieMap.getOrElseUpdate; a
     * lost race leaves an orphan temp subdir, never a wrong result),
-    * read back through the CALLER's session.
+    * read back through the CALLER's session (a repeat read skips the
+    * schema-inference job, see [[graft.sources.ParquetSchemaMemo]]).
     */
   def materialized(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
     if (!enabled) build
@@ -62,6 +63,6 @@ object QueryMemo {
         build.write.mode("overwrite").parquet(out)
         out
       })
-      spark.read.parquet(path)
+      graft.sources.ParquetSchemaMemo.read(spark, path)
     }
 }

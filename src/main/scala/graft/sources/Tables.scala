@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 object Tables {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    ParquetSchemaMemo.read(spark, s"$sfDir/$name.parquet")
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "orders")
@@ -50,7 +50,7 @@ object Tables {
     */
   private[graft] def readEvents(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
-    scala.util.Try(spark.read.parquet(path)).toOption
+    scala.util.Try(ParquetSchemaMemo.read(spark, path)).toOption
       .filter(df => df.schema.fieldNames.contains("ts") &&
         (df.schema("ts").dataType match {
           case TimestampType | TimestampNTZType => true

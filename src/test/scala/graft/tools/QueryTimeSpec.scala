@@ -22,4 +22,13 @@ class QueryTimeSpec extends AnyFunSuite {
     assert(status === 2)
     assert(err.toString.contains("unknown queries: nope, also_nope"))
   }
+
+  test("the per-query memory line counts the jobs started, next to tasks") {
+    val mem = new graft.Bench.MemListener
+    (0 until 3).foreach(i =>
+      mem.onJobStart(org.apache.spark.scheduler.SparkListenerJobStart(i, 0L, Seq.empty)))
+    assert(mem.json(0L, 0L).contains("\"jobs\":3,\"tasks\":0,"))
+    mem.reset()
+    assert(mem.json(0L, 0L).contains("\"jobs\":0,"))
+  }
 }
