@@ -46,7 +46,7 @@ object ParquetSchemaMemo {
     val confs = parquetConfs(spark)
     entries.get(path).filter(_.confs == confs).flatMap { e =>
       val df = spark.read.schema(e.schema).parquet(path)
-      Some(df).filter(_ => signature(df).contains(e.signature))
+      Option.when(signature(df).contains(e.signature))(df)
     }.getOrElse {
       val df = spark.read.parquet(path)
       signature(df).foreach(sig => entries.put(path, Entry(sig, confs, df.schema)))
