@@ -3,14 +3,17 @@ package graft.sources.osmpbf
 import java.util
 
 import graft.sources.osmxml.OsmXmlSource
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -33,12 +36,19 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Scale model — this is why PBF beats XML at 100 TB: the driver scans
   * only the ~16-byte frame headers to index blob offsets (no
-  * decompression), then schedules ONE INPUT PARTITION PER DATA BLOB, so
-  * a single planet file parallelizes across the cluster; each reader
-  * seeks to its blob, inflates ~8k entities, and streams rows. The
-  * session's Hadoop conf reaches those readers as one broadcast per
-  * scan ([[graft.sources.SessionConf]]), not inside the per-task
-  * factory. Schemas match the osm-xml source exactly.
+  * decompression), then plans input partitions the way Spark plans a
+  * file scan. `FilePartition.maxSplitBytes` (the `spark.sql.files.*`
+  * rule: `maxPartitionBytes`, `openCostInBytes`, `minPartitionNum`)
+  * sets a split size; each file's contiguous data blobs are cut into
+  * runs no larger than it, always on a blob boundary (a blob larger
+  * than the split is a run by itself); and `FilePartition.getFilePartitions`
+  * bin-packs the runs, so a planet file becomes hundreds of tasks, not
+  * one per 8k-entity blob, and a directory of small part files packs
+  * into few. A reader opens one stream per file in its partition and
+  * inflates and streams that file's blobs in file order, one blob in
+  * memory at a time. The session's Hadoop conf reaches those readers as
+  * one broadcast per scan ([[graft.sources.SessionConf]]), not inside
+  * the per-task factory. Schemas match the osm-xml source exactly.
   *
   * Malformed bytes fail with [[PbfFormatException]] naming the file and
   * blob offset; a blob never inflates past the spec's 32 MiB limit.
@@ -65,8 +75,8 @@ private[osmpbf] class OsmPbfTable(schema: StructType, kind: String, paths: Seq[S
 
   /** Write side: one `.osm.pbf` file per task under the target
     * directory (an OSMHeader frame + one OSMData blob per 8k entities),
-    * readable back by this source's directory/glob scan — the same
-    * blob-parallel layout the read side exploits. Tasks write to a temp
+    * readable back by this source's directory/glob scan, which packs
+    * small part files into shared input partitions. Tasks write to a temp
     * name and rename on commit (idempotent under retries); `append`
     * mode only.
     */
@@ -96,54 +106,35 @@ private[osmpbf] class OsmPbfTable(schema: StructType, kind: String, paths: Seq[S
       override def readSchema(): StructType = required
       override def toBatch: Batch = this
 
-      /** Index (file, offset, compressedLen) per OSMData blob by reading
-        * frame headers only.
-        */
+      /** Whole-blob runs bin-packed by Spark's file split rule. */
       override def planInputPartitions(): Array[InputPartition] = {
-        val conf = org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
-        paths.flatMap { p =>
+        val session = SparkSession.active
+        val conf = session.sessionState.newHadoopConf()
+        val files = paths.flatMap { p =>
           val hp = new Path(p)
           val fs = hp.getFileSystem(conf)
-          val files = fs.globStatus(hp) match {
+          val listed = fs.globStatus(hp) match {
             case null => Seq.empty
             case gs => gs.toSeq.flatMap(s =>
               if (s.isDirectory) fs.listStatus(s.getPath).filter(_.isFile).toSeq else Seq(s))
           }
-          files.flatMap { st =>
-            val in = fs.open(st.getPath)
-            val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-            try {
-              var offset = 0L
-              val size = st.getLen
-              while (offset < size) {
-                val headerLen = in.readInt() // 4-byte BE
-                // spec: BlobHeader < 64 KiB, Blob < 32 MiB
-                if (headerLen < 0 || headerLen > (64 << 10))
-                  throw new PbfFormatException(
-                    s"malformed PBF frame at ${st.getPath}:$offset: BlobHeader length $headerLen")
-                val headerBytes = new Array[Byte](headerLen)
-                in.readFully(headerBytes)
-                val hr = new ProtoReader(headerBytes)
-                var blobType = ""
-                var dataSize = 0
-                while (hr.hasNext) hr.readTag() match {
-                  case (1, 2) => blobType = hr.readString()
-                  case (3, 0) => dataSize = hr.readVarint().toInt
-                  case (_, wt) => hr.skip(wt)
-                }
-                if (dataSize < 0 || dataSize > PbfBlobDecoder.MaxRawBlobSize)
-                  throw new PbfFormatException(
-                    s"malformed PBF frame at ${st.getPath}:$offset: Blob length $dataSize")
-                val dataOffset = offset + 4 + headerLen
-                if (blobType == "OSMData")
-                  parts += PbfBlobPartition(st.getPath.toString, dataOffset, dataSize)
-                offset = dataOffset + dataSize
-                in.seek(offset)
-              }
-            } finally in.close()
-            parts
-          }
-        }.toArray
+          listed.map(st => st -> OsmPbfTable.blobIndex(fs, st))
+        }
+        val openCost = session.sessionState.conf.filesOpenCostInBytes
+        val maxSplit = FilePartition.maxSplitBytes(session,
+          files.map { case (st, _) => st.getLen + openCost }.sum)
+        val runs = files.flatMap { case (st, frames) => OsmPbfTable.runs(st, frames, maxSplit) }
+        val blobsOf = runs.map { case (pf, blobs) => (pf.filePath, pf.start) -> blobs }.toMap
+        // runs stay in file order (Spark's file scans sort by size first),
+        // so partitions, and the rows in them, follow the files' order; a
+        // partition holds two runs of one file only when maxPartitionNum
+        // re-packs with a larger split, and then they share one stream
+        FilePartition.getFilePartitions(session, runs.map(_._1), maxSplit)
+          .map { fp =>
+            val byFile = fp.files.toSeq.groupBy(_.filePath.toString)
+            PbfBlobsPartition(fp.files.map(_.filePath.toString).distinct.toSeq.map(path =>
+              PbfFileBlobs(path, byFile(path).flatMap(pf => blobsOf((pf.filePath, pf.start))))))
+          }.toArray
       }
 
       override def createReaderFactory(): PartitionReaderFactory =
@@ -162,12 +153,81 @@ private[osmpbf] class PbfReaderFactory(kind: String, full: StructType,
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     graft.sources.Pruning.project(
-      new PbfBlobReader(p.asInstanceOf[PbfBlobPartition], kind, conf.value.value),
+      new PbfBlobReader(p.asInstanceOf[PbfBlobsPartition], kind, conf.value.value),
       full, required)
 }
 
-private[osmpbf] case class PbfBlobPartition(path: String, offset: Long, length: Int)
-    extends InputPartition
+private[osmpbf] object OsmPbfTable {
+  /** One OSMData blob per entry, in file order, from the frame headers
+    * only: (frame start, the Blob message's offset and length).
+    */
+  def blobIndex(fs: FileSystem, st: FileStatus): Seq[(Long, PbfBlob)] = {
+    val in = fs.open(st.getPath)
+    val blobs = scala.collection.mutable.ArrayBuffer.empty[(Long, PbfBlob)]
+    try {
+      var offset = 0L
+      val size = st.getLen
+      while (offset < size) {
+        val headerLen = in.readInt() // 4-byte BE
+        // spec: BlobHeader < 64 KiB, Blob < 32 MiB
+        if (headerLen < 0 || headerLen > (64 << 10))
+          throw new PbfFormatException(
+            s"malformed PBF frame at ${st.getPath}:$offset: BlobHeader length $headerLen")
+        val headerBytes = new Array[Byte](headerLen)
+        in.readFully(headerBytes)
+        val hr = new ProtoReader(headerBytes)
+        var blobType = ""
+        var dataSize = 0
+        while (hr.hasNext) hr.readTag() match {
+          case (1, 2) => blobType = hr.readString()
+          case (3, 0) => dataSize = hr.readVarint().toInt
+          case (_, wt) => hr.skip(wt)
+        }
+        if (dataSize < 0 || dataSize > PbfBlobDecoder.MaxRawBlobSize)
+          throw new PbfFormatException(
+            s"malformed PBF frame at ${st.getPath}:$offset: Blob length $dataSize")
+        val dataOffset = offset + 4 + headerLen
+        if (blobType == "OSMData") blobs += offset -> PbfBlob(dataOffset, dataSize)
+        offset = dataOffset + dataSize
+        in.seek(offset)
+      }
+    } finally in.close()
+    blobs.toSeq
+  }
+
+  /** Cuts one file's blobs into runs of contiguous frames spanning at
+    * most `maxSplit` bytes; a blob whose frame alone is larger is a run
+    * by itself. Each run is the byte range Spark's packing sizes.
+    */
+  def runs(st: FileStatus, frames: Seq[(Long, PbfBlob)],
+      maxSplit: Long): Seq[(PartitionedFile, Seq[PbfBlob])] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[(PartitionedFile, Seq[PbfBlob])]
+    val run = scala.collection.mutable.ArrayBuffer.empty[PbfBlob]
+    var runStart = 0L
+    def close(): Unit = if (run.nonEmpty) {
+      val end = run.last.offset + run.last.length
+      out += PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath), runStart,
+        end - runStart, Array.empty[String], st.getModificationTime, st.getLen) -> run.toSeq
+      run.clear()
+    }
+    frames.foreach { case (frameStart, blob) =>
+      if (run.nonEmpty && blob.offset + blob.length - runStart > maxSplit) close()
+      if (run.isEmpty) runStart = frameStart
+      run += blob
+    }
+    close()
+    out.toSeq
+  }
+}
+
+/** One OSMData blob: its Blob message's file offset and length. */
+private[osmpbf] case class PbfBlob(offset: Long, length: Int)
+
+/** A partition's blobs of one file, in file order. */
+private[osmpbf] case class PbfFileBlobs(path: String, blobs: Seq[PbfBlob])
+
+/** One input partition: whole blobs of one or more files. */
+private[osmpbf] case class PbfBlobsPartition(files: Seq[PbfFileBlobs]) extends InputPartition
 
 private[osmpbf] class PbfBatchWrite(kind: String, dir: String,
     conf: Broadcast[SerializableConfiguration])
@@ -228,23 +288,46 @@ private[osmpbf] class PbfDataWriter(kind: String, dir: String,
   override def close(): Unit = ()
 }
 
-/** Reads one OSMData blob's bytes and streams its decoded rows. */
-private[osmpbf] class PbfBlobReader(part: PbfBlobPartition, kind: String,
+/** Streams a partition's rows: one input stream per file, whose blobs
+  * are read and decoded in file order, one blob in memory at a time.
+  */
+private[osmpbf] class PbfBlobReader(part: PbfBlobsPartition, kind: String,
     conf: org.apache.hadoop.conf.Configuration)
     extends PartitionReader[InternalRow] {
 
-  private val rows: Iterator[InternalRow] = {
-    val hp = new Path(part.path)
-    val in = hp.getFileSystem(conf).open(hp)
-    val compressed = new Array[Byte](part.length)
-    try { in.seek(part.offset); in.readFully(compressed) } finally in.close()
-    new PbfBlobDecoder(kind, s"${part.path}:${part.offset}").decode(compressed)
+  private val files = part.files.iterator
+  private var path: String = _
+  private var blobs: Iterator[PbfBlob] = Iterator.empty
+  private var in: org.apache.hadoop.fs.FSDataInputStream = _
+  private var rows: Iterator[InternalRow] = Iterator.empty
+  private var current: InternalRow = _
+
+  /** Decodes the next blob into `rows`; false after the last one. */
+  private def nextBlob(): Boolean = {
+    while (!blobs.hasNext) {
+      close()
+      if (!files.hasNext) return false
+      val f = files.next()
+      val hp = new Path(f.path)
+      in = hp.getFileSystem(conf).open(hp)
+      path = f.path
+      blobs = f.blobs.iterator
+    }
+    val b = blobs.next()
+    val compressed = new Array[Byte](b.length)
+    in.seek(b.offset)
+    in.readFully(compressed)
+    rows = new PbfBlobDecoder(kind, s"$path:${b.offset}").decode(compressed)
+    true
   }
 
-  private var current: InternalRow = _
-  override def next(): Boolean = { if (rows.hasNext) { current = rows.next(); true } else false }
+  override def next(): Boolean = {
+    while (!rows.hasNext) if (!nextBlob()) return false
+    current = rows.next()
+    true
+  }
   override def get(): InternalRow = current
-  override def close(): Unit = ()
+  override def close(): Unit = if (in != null) { in.close(); in = null }
 }
 
 /** Malformed PBF bytes. The message names the file and byte offset of

@@ -3,7 +3,9 @@ package graft.sources
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.sources.osmpbf.ProtoWriter
+import graft.sources.osmpbf.{OsmPbfEncoder, PbfFormatException, ProtoWriter}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
 
 /** S1 (PBF) — fixture file hand-encoded with [[ProtoWriter]] per the
@@ -201,9 +203,144 @@ class OsmPbfSourceSpec extends SparkSpec {
     assert(rows(0).getAs[Map[String, String]]("tags") == Map("building" -> "yes"))
   }
 
-  test("blob index partitions the file (one partition per data blob)") {
-    val df = spark.read.format("osm-pbf").option("kind", "nodes").load(pbfPath)
-    assert(df.rdd.getNumPartitions == 1) // fixture has one OSMData blob
-    assert(df.count() == 3)
+  /** The node at `id`: one tag, fixed metadata, a position from the id. */
+  private def node(id: Long): Row =
+    Row(id, 1, 7, java.sql.Timestamp.from(java.time.Instant.parse("2024-03-04T05:06:07Z")),
+      900L, Map("amenity" -> s"a$id"), (id % 360) - 180.0 + 0.5, (id % 170) - 85.0 + 0.25,
+      "alice", true)
+
+  private lazy val toInternal = CatalystTypeConverters.createToCatalystConverter(
+    graft.sources.osmxml.OsmXmlSource.schemaFor("nodes"))
+
+  /** A written blob: where its frame starts, where its Blob message
+    * starts (the offset errors name) and where it ends.
+    */
+  private case class Blob(frame: Long, offset: Long, end: Long) {
+    def frameLen: Long = end - frame
+  }
+
+  /** An OSMHeader frame, then one OSMData blob per entry of `sizes`
+    * holding that many nodes with consecutive ids from 1.
+    */
+  private def writeBlobs(path: String, sizes: Seq[Int]): Seq[Blob] = {
+    val out = new java.io.FileOutputStream(path)
+    try {
+      var pos = 0L
+      var id = 1L
+      def put(frame: Array[Byte]): Long = {
+        out.write(frame); val at = pos; pos += frame.length; at
+      }
+      put(OsmPbfEncoder.headerFrame("nodes"))
+      sizes.map { n =>
+        val frame = OsmPbfEncoder.encodeBlock("nodes",
+          (id until id + n).map(i => toInternal(node(i)).asInstanceOf[InternalRow]))
+        id += n
+        val at = put(frame)
+        Blob(at, at + 4 + java.nio.ByteBuffer.wrap(frame).getInt, pos)
+      }
+    } finally out.close()
+  }
+
+  /** 200 blobs of 5 nodes each (ids 1..1000). */
+  private lazy val (manyPath, manyBlobs) = {
+    val path = Files.createTempDirectory("pbf-many").toString + "/many.osm.pbf"
+    (path, writeBlobs(path, Seq.fill(200)(5)))
+  }
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def nodes(path: String) = spark.read.format("osm-pbf").option("kind", "nodes").load(path)
+
+  /** Rows per input partition, in partition order. */
+  private def partitionSizes(path: String): Seq[Int] =
+    nodes(path).rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
+
+  private val MaxBytes = "spark.sql.files.maxPartitionBytes"
+  private val OpenCost = "spark.sql.files.openCostInBytes"
+
+  test("blob runs partition the file by Spark's split rule (exact counts)") {
+    assert(nodes(pbfPath).rdd.getNumPartitions == 1) // fixture has one OSMData blob
+    assert(nodes(pbfPath).count() == 3)
+    val blob = manyBlobs.map(_.frameLen).max
+    // defaults: the 4 MB open cost sets a split far above the ~30 KB file
+    assert(partitionSizes(manyPath) == Seq(1000))
+    // a 1-byte split: every blob is larger, so each stands alone
+    assert(withConf(MaxBytes -> "1", OpenCost -> "0")(partitionSizes(manyPath)) ==
+      Seq.fill(200)(5))
+    // a one-blob split with no open cost is the one-partition-per-blob layout
+    val perBlob = withConf(MaxBytes -> blob.toString, OpenCost -> "0") {
+      nodes(manyPath).rdd.mapPartitions(it => Iterator(it.map(_.getLong(0)).toSeq)).collect()
+    }
+    assert(perBlob.toSeq == (1L to 1000L).grouped(5).map(_.toSeq).toSeq)
+    // a partition cap re-packs the one-blob runs: all 200 share one file stream
+    assert(withConf(MaxBytes -> blob.toString, OpenCost -> "0",
+      "spark.sql.files.maxPartitionNum" -> "1")(partitionSizes(manyPath)) == Seq(1000))
+    // ten blobs' worth: runs of exactly ten whole blobs
+    assert(withConf(MaxBytes -> (10 * blob).toString, OpenCost -> "0")(
+      partitionSizes(manyPath)) == Seq.fill(20)(50))
+  }
+
+  test("split reads return the one-blob-per-partition rows, each entity once") {
+    val blob = manyBlobs.map(_.frameLen).max
+    def rows(kv: (String, String)*) =
+      withConf(kv: _*)(nodes(manyPath).collect().sortBy(_.getLong(0)).toSeq)
+    val perBlob = rows(MaxBytes -> blob.toString, OpenCost -> "0")
+    assert(perBlob.map(_.getLong(0)) == (1L to 1000L))
+    assert(perBlob.map(_.getAs[Map[String, String]]("tags")) ==
+      (1L to 1000L).map(i => Map("amenity" -> s"a$i")))
+    assert(rows() == perBlob)
+    assert(rows(MaxBytes -> (7 * blob).toString, OpenCost -> "0") == perBlob)
+    assert(rows(MaxBytes -> (10 * blob).toString, OpenCost -> blob.toString) == perBlob)
+  }
+
+  test("a blob larger than the split size is a partition by itself") {
+    val path = Files.createTempDirectory("pbf-big").toString + "/big.osm.pbf"
+    val blobs = writeBlobs(path, Seq(5, 5, 5, 2000, 5, 5, 5))
+    val small = blobs.patch(3, Nil, 1).map(_.frameLen).max
+    assert(blobs(3).frameLen > 3 * small)
+    val sizes = withConf(MaxBytes -> (3 * small).toString, OpenCost -> "0")(partitionSizes(path))
+    assert(sizes.sorted == Seq(15, 15, 2000))
+  }
+
+  test("a directory of writer part files packs into fewer partitions than files") {
+    val dir = Files.createTempDirectory("pbf-parts").toString + "/out"
+    spark.createDataFrame(
+      spark.sparkContext.parallelize((1L to 30L).map(node), 1),
+      graft.sources.osmxml.OsmXmlSource.schemaFor("nodes"))
+      .repartition(3)
+      .write.format("osm-pbf").option("kind", "nodes").mode("append").save(dir)
+    assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".osm.pbf")) == 3)
+    // defaults: each file costs the 4 MB open cost against a 4 MB split
+    assert(nodes(dir).rdd.getNumPartitions == 3)
+    // one partition's worth of parallelism wanted: the split covers all three
+    val packed = withConf("spark.sql.files.minPartitionNum" -> "1") {
+      val df = nodes(dir)
+      (df.rdd.getNumPartitions, df.collect().map(_.getLong(0)).sorted.toSeq)
+    }
+    assert(packed == (1, 1L to 30L))
+  }
+
+  test("a corrupt blob inside a multi-blob run fails named at that blob") {
+    val path = Files.createTempDirectory("pbf-corrupt").toString + "/bad.osm.pbf"
+    val blobs = writeBlobs(path, Seq.fill(20)(5))
+    val bad = blobs(12)
+    // zero the Blob message (field number 0): the frame header stays valid
+    val raf = new java.io.RandomAccessFile(path, "rw")
+    try { raf.seek(bad.offset); raf.write(new Array[Byte]((bad.end - bad.offset).toInt)) }
+    finally raf.close()
+    assert(nodes(path).rdd.getNumPartitions == 1) // all 20 blobs in one run
+    val e = intercept[org.apache.spark.SparkException](nodes(path).collect())
+    def chain(t: Throwable): List[Throwable] = if (t == null) Nil else t :: chain(t.getCause)
+    val named = chain(e).collectFirst { case p: PbfFormatException => p.getMessage }
+    assert(named.exists(_.contains(s"$path:${bad.offset}: ")), chain(e).map(_.getMessage))
+    assert(!named.exists(_.contains(s"$path:${blobs.head.offset}: ")))
   }
 }
