@@ -126,15 +126,13 @@ private[osmpbf] class OsmPbfTable(schema: StructType, kind: String, paths: Seq[S
         val runs = files.flatMap { case (st, frames) => OsmPbfTable.runs(st, frames, maxSplit) }
         val blobsOf = runs.map { case (pf, blobs) => (pf.filePath, pf.start) -> blobs }.toMap
         // runs stay in file order (Spark's file scans sort by size first),
-        // so partitions, and the rows in them, follow the files' order; a
-        // partition holds two runs of one file only when maxPartitionNum
-        // re-packs with a larger split, and then they share one stream
+        // so partitions, and the rows in them, follow the files' order.
+        // Readers get the decoded Hadoop path (`toPath`) the blob index
+        // read: `new Path` would quote the URL-encoded `SparkPath` again.
         FilePartition.getFilePartitions(session, runs.map(_._1), maxSplit)
-          .map { fp =>
-            val byFile = fp.files.toSeq.groupBy(_.filePath.toString)
-            PbfBlobsPartition(fp.files.map(_.filePath.toString).distinct.toSeq.map(path =>
-              PbfFileBlobs(path, byFile(path).flatMap(pf => blobsOf((pf.filePath, pf.start))))))
-          }.toArray
+          .map(fp => PbfBlobsPartition(fp.files.toSeq.map(pf =>
+            pf.toPath.toString -> blobsOf((pf.filePath, pf.start)))))
+          .toArray
       }
 
       override def createReaderFactory(): PartitionReaderFactory =
@@ -223,11 +221,11 @@ private[osmpbf] object OsmPbfTable {
 /** One OSMData blob: its Blob message's file offset and length. */
 private[osmpbf] case class PbfBlob(offset: Long, length: Int)
 
-/** A partition's blobs of one file, in file order. */
-private[osmpbf] case class PbfFileBlobs(path: String, blobs: Seq[PbfBlob])
-
-/** One input partition: whole blobs of one or more files. */
-private[osmpbf] case class PbfBlobsPartition(files: Seq[PbfFileBlobs]) extends InputPartition
+/** One input partition: runs of whole blobs, each a Hadoop path and
+  * that run's blobs in file order; runs of one file are adjacent.
+  */
+private[osmpbf] case class PbfBlobsPartition(runs: Seq[(String, Seq[PbfBlob])])
+    extends InputPartition
 
 private[osmpbf] class PbfBatchWrite(kind: String, dir: String,
     conf: Broadcast[SerializableConfiguration])
@@ -288,14 +286,15 @@ private[osmpbf] class PbfDataWriter(kind: String, dir: String,
   override def close(): Unit = ()
 }
 
-/** Streams a partition's rows: one input stream per file, whose blobs
-  * are read and decoded in file order, one blob in memory at a time.
+/** Streams a partition's rows: one input stream per file, kept open
+  * across that file's adjacent runs, whose blobs are read and decoded
+  * in file order, one blob in memory at a time.
   */
 private[osmpbf] class PbfBlobReader(part: PbfBlobsPartition, kind: String,
     conf: org.apache.hadoop.conf.Configuration)
     extends PartitionReader[InternalRow] {
 
-  private val files = part.files.iterator
+  private val runs = part.runs.iterator
   private var path: String = _
   private var blobs: Iterator[PbfBlob] = Iterator.empty
   private var in: org.apache.hadoop.fs.FSDataInputStream = _
@@ -305,13 +304,15 @@ private[osmpbf] class PbfBlobReader(part: PbfBlobsPartition, kind: String,
   /** Decodes the next blob into `rows`; false after the last one. */
   private def nextBlob(): Boolean = {
     while (!blobs.hasNext) {
-      close()
-      if (!files.hasNext) return false
-      val f = files.next()
-      val hp = new Path(f.path)
-      in = hp.getFileSystem(conf).open(hp)
-      path = f.path
-      blobs = f.blobs.iterator
+      if (!runs.hasNext) { close(); return false }
+      val (p, bs) = runs.next()
+      if (in == null || p != path) {
+        close()
+        val hp = new Path(p)
+        in = hp.getFileSystem(conf).open(hp)
+        path = p
+      }
+      blobs = bs.iterator
     }
     val b = blobs.next()
     val compressed = new Array[Byte](b.length)

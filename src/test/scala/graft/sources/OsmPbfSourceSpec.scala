@@ -328,19 +328,26 @@ class OsmPbfSourceSpec extends SparkSpec {
     assert(packed == (1, 1L to 30L))
   }
 
-  test("a corrupt blob inside a multi-blob run fails named at that blob") {
-    val path = Files.createTempDirectory("pbf-corrupt").toString + "/bad.osm.pbf"
-    val blobs = writeBlobs(path, Seq.fill(20)(5))
-    val bad = blobs(12)
-    // zero the Blob message (field number 0): the frame header stays valid
-    val raf = new java.io.RandomAccessFile(path, "rw")
-    try { raf.seek(bad.offset); raf.write(new Array[Byte]((bad.end - bad.offset).toInt)) }
-    finally raf.close()
-    assert(nodes(path).rdd.getNumPartitions == 1) // all 20 blobs in one run
-    val e = intercept[org.apache.spark.SparkException](nodes(path).collect())
-    def chain(t: Throwable): List[Throwable] = if (t == null) Nil else t :: chain(t.getCause)
-    val named = chain(e).collectFirst { case p: PbfFormatException => p.getMessage }
-    assert(named.exists(_.contains(s"$path:${bad.offset}: ")), chain(e).map(_.getMessage))
-    assert(!named.exists(_.contains(s"$path:${blobs.head.offset}: ")))
+  test("a corrupt blob inside a multi-blob run fails named at that blob's path:offset") {
+    // the second directory's name holds characters URIs quote: the file
+    // must still be found, and named by its decoded Hadoop path
+    Seq("plain", "a b%20c").foreach { name =>
+      val dir = Files.createTempDirectory("pbf-corrupt").toString + s"/$name"
+      new java.io.File(dir).mkdirs()
+      val path = s"$dir/bad.osm.pbf"
+      val blobs = writeBlobs(path, Seq.fill(20)(5))
+      assert(nodes(dir).collect().map(_.getLong(0)).sorted.toSeq == (1L to 100L))
+      val bad = blobs(12)
+      // zero the Blob message (field number 0): the frame header stays valid
+      val raf = new java.io.RandomAccessFile(path, "rw")
+      try { raf.seek(bad.offset); raf.write(new Array[Byte]((bad.end - bad.offset).toInt)) }
+      finally raf.close()
+      assert(nodes(path).rdd.getNumPartitions == 1) // all 20 blobs in one run
+      val e = intercept[org.apache.spark.SparkException](nodes(path).collect())
+      def chain(t: Throwable): List[Throwable] = if (t == null) Nil else t :: chain(t.getCause)
+      val named = chain(e).collectFirst { case p: PbfFormatException => p.getMessage }
+      assert(named.exists(_.contains(s"file:$path:${bad.offset}: ")), chain(e).map(_.getMessage))
+      assert(!named.exists(_.contains(s"$path:${blobs.head.offset}: ")))
+    }
   }
 }
