@@ -1,24 +1,21 @@
 package graft.sources.osmpbf
 
-import java.util
+import java.io.OutputStream
 
-import graft.sources.osmxml.OsmXmlSource
+import graft.sources.{FileTable, PartEncoder, PartFormat, RowDecoder}
+import graft.sources.osmxml.OsmSourceProvider
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.write.LogicalWriteInfo
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 reader for OSM PBF files — the reference's preferred
   * input ("PBF is quickest", README.md:7; S1 in SURVEY.md §2.1).
@@ -46,113 +43,56 @@ import org.apache.spark.util.SerializableConfiguration
   * one per 8k-entity blob, and a directory of small part files packs
   * into few. A reader opens one stream per file in its partition and
   * inflates and streams that file's blobs in file order, one blob in
-  * memory at a time. The session's Hadoop conf reaches those readers as
-  * one broadcast per scan ([[graft.sources.SessionConf]]), not inside
-  * the per-task factory. Schemas match the osm-xml source exactly.
+  * memory at a time. Listing, column pruning, the write chain and the
+  * task commit are the shared file-source frame ([[graft.sources.FileTable]]).
+  * Schemas and the `kind` option match the osm-xml source exactly.
   *
   * Malformed bytes fail with [[PbfFormatException]] naming the file and
   * blob offset; a blob never inflates past the spec's 32 MiB limit.
   */
-class OsmPbfSource extends TableProvider with DataSourceRegister {
+class OsmPbfSource extends OsmSourceProvider(new OsmPbfTable(_, _, _)) {
   override def shortName(): String = "osm-pbf"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    OsmXmlSource.schemaFor(options.getOrDefault("kind", "nodes"))
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new OsmPbfTable(schema, properties.getOrDefault("kind", "nodes"),
-      Option(properties.get("path")).toSeq)
 }
 
+/** Write side: one `.osm.pbf` part file per task (an OSMHeader frame +
+  * one OSMData blob per 8k entities), readable back by this source's
+  * directory/glob scan, which packs small part files into shared input
+  * partitions.
+  */
 private[osmpbf] class OsmPbfTable(schema: StructType, kind: String, paths: Seq[String])
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"osm-pbf($kind)"
-  override def schema(): StructType = schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE)
+    extends FileTable(s"osm-pbf($kind)", schema, paths) {
 
-  /** Write side: one `.osm.pbf` file per task under the target
-    * directory (an OSMHeader frame + one OSMData blob per 8k entities),
-    * readable back by this source's directory/glob scan, which packs
-    * small part files into shared input partitions. Tasks write to a temp
-    * name and rename on commit (idempotent under retries); `append`
-    * mode only.
-    */
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder = {
-    require(paths.size == 1, "osm-pbf write needs exactly one target path")
+  override def decoder: RowDecoder = PbfDecoder(kind)
+
+  override def partFormat(info: LogicalWriteInfo): PartFormat = {
     require(info.schema().fieldNames.sameElements(schema.fieldNames),
       s"osm-pbf($kind) write schema must be ${schema.fieldNames.mkString(", ")}; " +
         s"got ${info.schema().fieldNames.mkString(", ")}")
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.Write {
-          override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-            new PbfBatchWrite(kind, paths.head, graft.sources.SessionConf.broadcast())
-        }
-    }
+    PbfPart(kind)
   }
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with Scan with Batch
-        with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
-      private var required: StructType = schema
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = requiredSchema
-      override def build(): Scan = this
-      override def readSchema(): StructType = required
-      override def toBatch: Batch = this
-
-      /** Whole-blob runs bin-packed by Spark's file split rule. */
-      override def planInputPartitions(): Array[InputPartition] = {
-        val session = SparkSession.active
-        val conf = session.sessionState.newHadoopConf()
-        val files = paths.flatMap { p =>
-          val hp = new Path(p)
-          val fs = hp.getFileSystem(conf)
-          val listed = fs.globStatus(hp) match {
-            case null => Seq.empty
-            case gs => gs.toSeq.flatMap(s =>
-              if (s.isDirectory) fs.listStatus(s.getPath).filter(_.isFile).toSeq else Seq(s))
-          }
-          listed.map(st => st -> OsmPbfTable.blobIndex(fs, st))
-        }
-        val openCost = session.sessionState.conf.filesOpenCostInBytes
-        val maxSplit = FilePartition.maxSplitBytes(session,
-          files.map { case (st, _) => st.getLen + openCost }.sum)
-        val runs = files.flatMap { case (st, frames) => OsmPbfTable.runs(st, frames, maxSplit) }
-        val blobsOf = runs.map { case (pf, blobs) => (pf.filePath, pf.start) -> blobs }.toMap
-        // runs stay in file order (Spark's file scans sort by size first),
-        // so partitions, and the rows in them, follow the files' order.
-        // Readers get the decoded Hadoop path (`toPath`) the blob index
-        // read: `new Path` would quote the URL-encoded `SparkPath` again.
-        FilePartition.getFilePartitions(session, runs.map(_._1), maxSplit)
-          .map(fp => PbfBlobsPartition(fp.files.toSeq.map(pf =>
-            pf.toPath.toString -> blobsOf((pf.filePath, pf.start)))))
-          .toArray
-      }
-
-      override def createReaderFactory(): PartitionReaderFactory =
-        new PbfReaderFactory(kind, schema, required, graft.sources.SessionConf.broadcast())
-    }
+  /** Whole-blob runs bin-packed by Spark's file split rule. */
+  override def plan(session: SparkSession, conf: Configuration,
+      listed: Seq[FileStatus]): Seq[InputPartition] = {
+    val files = listed.map(st => st -> OsmPbfTable.blobIndex(st.getPath.getFileSystem(conf), st))
+    val openCost = session.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(session,
+      files.map { case (st, _) => st.getLen + openCost }.sum)
+    val runs = files.flatMap { case (st, frames) => OsmPbfTable.runs(st, frames, maxSplit) }
+    val blobsOf = runs.map { case (pf, blobs) => (pf.filePath, pf.start) -> blobs }.toMap
+    // runs stay in file order (Spark's file scans sort by size first),
+    // so partitions, and the rows in them, follow the files' order.
+    // Readers get the decoded Hadoop path (`toPath`) the blob index
+    // read: `new Path` would quote the URL-encoded `SparkPath` again.
+    FilePartition.getFilePartitions(session, runs.map(_._1), maxSplit)
+      .map(fp => PbfBlobsPartition(fp.files.toSeq.map(pf =>
+        pf.toPath.toString -> blobsOf((pf.filePath, pf.start)))))
+  }
 }
 
-/** Top-level (serializable) factory — an anonymous one would capture
-  * the non-serializable ScanBuilder. Holds the broadcast handle of the
-  * driver's Hadoop conf ([[graft.sources.SessionConf]]), so
-  * session-configured filesystem options reach the executor readers
-  * without each task deserializing a copy of the conf.
-  */
-private[osmpbf] class PbfReaderFactory(kind: String, full: StructType,
-    required: StructType, conf: Broadcast[SerializableConfiguration])
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    graft.sources.Pruning.project(
-      new PbfBlobReader(p.asInstanceOf[PbfBlobsPartition], kind, conf.value.value),
-      full, required)
+private[osmpbf] case class PbfDecoder(kind: String) extends RowDecoder {
+  override def open(p: InputPartition, conf: Configuration): PartitionReader[InternalRow] =
+    new PbfBlobReader(p.asInstanceOf[PbfBlobsPartition], kind, conf)
 }
 
 private[osmpbf] object OsmPbfTable {
@@ -227,63 +167,24 @@ private[osmpbf] case class PbfBlob(offset: Long, length: Int)
 private[osmpbf] case class PbfBlobsPartition(runs: Seq[(String, Seq[PbfBlob])])
     extends InputPartition
 
-private[osmpbf] class PbfBatchWrite(kind: String, dir: String,
-    conf: Broadcast[SerializableConfiguration])
-    extends org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
+/** Buffers rows and writes one OSMData blob per `blockSize` entities. */
+private[osmpbf] case class PbfPart(kind: String) extends PartFormat {
+  override def ext: String = "osm.pbf"
+  override def encoder(out: OutputStream, name: String): PartEncoder = new PartEncoder {
+    out.write(OsmPbfEncoder.headerFrame(kind))
+    private val buf = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new PbfDataWriterFactory(kind, dir, conf)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
+    private def flush(): Unit = if (buf.nonEmpty) {
+      out.write(OsmPbfEncoder.encodeBlock(kind, buf.toSeq))
+      buf.clear()
+    }
 
-private[osmpbf] class PbfDataWriterFactory(kind: String, dir: String,
-    conf: Broadcast[SerializableConfiguration])
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new PbfDataWriter(kind, dir, partitionId, taskId, conf.value.value)
-}
-
-private[osmpbf] case class PbfCommitMessage(path: String)
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
-
-/** Buffers rows and flushes one OSMData blob per `blockSize` entities;
-  * writes to a task-unique temp file, renamed into place on commit so
-  * task retries never leave partial files visible.
-  */
-private[osmpbf] class PbfDataWriter(kind: String, dir: String,
-    partitionId: Int, taskId: Long, conf: org.apache.hadoop.conf.Configuration)
-    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-
-  private val fs = new Path(dir).getFileSystem(conf)
-  private val finalPath = new Path(dir, f"part-$partitionId%05d.osm.pbf")
-  private val tmpPath = new Path(dir, f".part-$partitionId%05d-$taskId.osm.pbf.tmp")
-  private val out = { fs.mkdirs(new Path(dir)); fs.create(tmpPath, true) }
-  out.write(OsmPbfEncoder.headerFrame(kind))
-
-  private val buf = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-
-  private def flush(): Unit = if (buf.nonEmpty) {
-    out.write(OsmPbfEncoder.encodeBlock(kind, buf.toSeq))
-    buf.clear()
+    override def write(row: InternalRow): Unit = {
+      buf += row.copy()
+      if (buf.size >= OsmPbfEncoder.DefaultBlockSize) flush()
+    }
+    override def finish(): Unit = flush()
   }
-
-  override def write(row: InternalRow): Unit = {
-    buf += row.copy()
-    if (buf.size >= OsmPbfEncoder.DefaultBlockSize) flush()
-  }
-
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    flush(); out.close()
-    fs.delete(finalPath, false)
-    fs.rename(tmpPath, finalPath)
-    PbfCommitMessage(finalPath.toString)
-  }
-
-  override def abort(): Unit = { out.close(); fs.delete(tmpPath, false) }
-  override def close(): Unit = ()
 }
 
 /** Streams a partition's rows: one input stream per file, kept open

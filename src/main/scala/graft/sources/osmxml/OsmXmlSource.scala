@@ -3,18 +3,18 @@ package graft.sources.osmxml
 import java.util
 
 import graft.model.OsmModel
-import org.apache.hadoop.fs.Path
-import org.apache.spark.broadcast.Broadcast
+import graft.sources.{FilePart, FileSource, FileTable, PartFormat, RowDecoder}
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.write.LogicalWriteInfo
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 reader for OSM XML files (`.osm`) — the reference's S1
   * input surface (SURVEY.md §2.1; osmium parses PBF/XML, filter.py:260)
@@ -35,17 +35,23 @@ import org.apache.spark.util.SerializableConfiguration
   * document — not line-splittable without an index; large extracts ship
   * as many regional files). Parsing is streaming StAX (JDK built-in,
   * zero dependencies): constant memory per partition regardless of file
-  * size. PBF would reuse this scaffold with a protobuf block reader —
-  * blocked here by the no-new-dependencies build.
+  * size. Listing, column pruning, the write chain and the task commit
+  * are the shared file-source frame ([[graft.sources.FileTable]]), as
+  * for `osm-pbf`.
   */
-class OsmXmlSource extends TableProvider with DataSourceRegister {
+class OsmXmlSource extends OsmSourceProvider(new OsmXmlTable(_, _, _)) {
   override def shortName(): String = "osm-xml"
+}
 
-  private def kindOf(options: CaseInsensitiveStringMap): String = {
-    val k = options.getOrDefault("kind", "nodes")
-    require(k == "nodes" || k == "ways" || k == "relations",
-      s"osm-xml kind must be nodes|ways|relations, got $k")
-    k
+/** The `osm-pbf` and `osm-xml` providers: the `kind` option (`nodes` by
+  * default) picks the table's schema ([[OsmXmlSource.schemaFor]]).
+  */
+private[sources] abstract class OsmSourceProvider(table: (StructType, String, Seq[String]) => Table)
+    extends TableProvider with DataSourceRegister {
+  private def kindOf(options: util.Map[String, String]): String = {
+    val kind = options.getOrDefault("kind", "nodes")
+    OsmXmlSource.schemaFor(kind)
+    kind
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -53,9 +59,7 @@ class OsmXmlSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new OsmXmlTable(schema,
-      properties.getOrDefault("kind", "nodes"),
-      Option(properties.get("path")).toSeq)
+    table(schema, kindOf(properties), Option(properties.get("path")).toSeq)
 }
 
 object OsmXmlSource {
@@ -66,109 +70,50 @@ object OsmXmlSource {
   /** Osmosis relations shape with the ordered member array. */
   val relationsSchema: StructType = OsmModel.relationsSchema
 
+  /** The schema of one `kind` for both OSM formats; any other kind fails. */
   def schemaFor(kind: String): StructType = kind match {
+    case "nodes" => nodesSchema
     case "ways" => waysSchema
     case "relations" => relationsSchema
-    case _ => nodesSchema
+    case _ => throw new IllegalArgumentException(
+      s"OSM kind must be nodes|ways|relations, got '$kind'")
   }
 }
 
+/** Write side: one `.osm` document per task under the target directory
+  * (the read side scans directories/globs, so the output is immediately
+  * re-readable).
+  */
 private[osmxml] class OsmXmlTable(schema: StructType, kind: String, paths: Seq[String])
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"osm-xml($kind)"
-  override def schema(): StructType = schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE)
-
-  /** Write side: one `.osm` document per task under the target
-    * directory (the read side scans directories/globs, so the output is
-    * immediately re-readable). Temp-file + rename per task; `append`
-    * mode only.
-    */
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder = {
-    require(paths.size == 1, "osm-xml write needs exactly one target path")
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.Write {
-          override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-            new OsmXmlBatchWrite(kind, paths.head, graft.sources.SessionConf.broadcast())
-        }
-    }
-  }
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with Scan with Batch
-        with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
-      private var required: StructType = schema
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = requiredSchema
-      override def build(): Scan = this
-      override def readSchema(): StructType = required
-      override def toBatch: Batch = this
-      override def planInputPartitions(): Array[InputPartition] = {
-        val conf = org.apache.spark.sql.SparkSession.active
-          .sessionState.newHadoopConf()
-        paths.flatMap { p =>
-          val hp = new Path(p)
-          val fs = hp.getFileSystem(conf)
-          val stats = fs.globStatus(hp) match {
-            case null => Array.empty[org.apache.hadoop.fs.FileStatus]
-            case gs => gs.flatMap { s =>
-              if (s.isDirectory) fs.listStatus(s.getPath).filter(_.isFile) else Array(s)
-            }
-          }
-          stats.map(s => OsmXmlPartition(s.getPath.toString): InputPartition)
-        }.toArray
-      }
-      override def createReaderFactory(): PartitionReaderFactory =
-        new OsmXmlReaderFactory(kind, schema, required, graft.sources.SessionConf.broadcast())
-    }
+    extends FileTable(s"osm-xml($kind)", schema, paths) {
+  override def decoder: RowDecoder = XmlDecoder(kind)
+  override def partFormat(info: LogicalWriteInfo): PartFormat = XmlPart(kind)
 }
 
-private[osmxml] case class OsmXmlPartition(path: String) extends InputPartition
-
-private[osmxml] class OsmXmlReaderFactory(kind: String, full: StructType,
-    required: StructType, conf: Broadcast[SerializableConfiguration])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    graft.sources.Pruning.project(
-      new OsmXmlPartitionReader(partition.asInstanceOf[OsmXmlPartition].path, kind,
-        conf.value.value),
-      full, required)
+private[osmxml] case class XmlDecoder(kind: String) extends RowDecoder {
+  override def open(p: InputPartition, conf: Configuration): PartitionReader[InternalRow] =
+    new OsmXmlPartitionReader(p.asInstanceOf[FilePart].path, kind, conf)
 }
 
 /** Streaming StAX parse of one OSM XML file, emitting one InternalRow
   * per requested entity kind.
   */
 private[osmxml] class OsmXmlPartitionReader(path: String, kind: String,
-    conf: org.apache.hadoop.conf.Configuration)
+    conf: Configuration)
     extends PartitionReader[InternalRow] {
 
   import javax.xml.stream.XMLStreamConstants._
 
-  private val hp = new Path(path)
   // transparent decompression by extension (.osm.bz2 / .osm.gz — the
-  // forms planet extracts actually ship in; osmium reads them natively,
-  // cf. /root/reference/README.md:7's format guidance). A compressed
-  // XML file stays one partition — none of these codecs are splittable,
-  // and the source's unit of parallelism is the file either way.
-  private val in = {
-    val raw = hp.getFileSystem(conf).open(hp)
-    val codec =
-      new org.apache.hadoop.io.compress.CompressionCodecFactory(conf).getCodec(hp)
-    if (codec == null) raw else codec.createInputStream(raw)
-  }
+  // forms planet extracts actually ship in; osmium reads them natively).
+  // A compressed XML file stays one partition — none of these codecs
+  // are splittable, and the source's unit of parallelism is the file.
+  private val in = FileSource.open(path, conf)
   private val reader = javax.xml.stream.XMLInputFactory.newInstance().createXMLStreamReader(in)
 
   private var row: InternalRow = _
 
-  private val targetElement = kind match {
-    case "ways" => "way"
-    case "relations" => "relation"
-    case _ => "node"
-  }
+  private val targetElement = kind.stripSuffix("s") // a checked kind: node, way or relation
 
   private def attr(name: String): String = {
     var i = 0

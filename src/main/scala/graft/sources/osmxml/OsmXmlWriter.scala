@@ -1,44 +1,25 @@
 package graft.sources.osmxml
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.broadcast.Broadcast
+import java.io.OutputStream
+
+import graft.sources.{PartEncoder, PartFormat}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write._
-import org.apache.spark.util.SerializableConfiguration
 
 /** Write-side of the `osm-xml` source: streams OSM XML 0.6 documents,
   * one file per task. Rows arrive in the source schemas
   * ([[graft.model.OsmModel]]). Null metadata attributes are omitted
   * (OSM XML's own optionality); `visible` is written only when false.
   */
-private[osmxml] class OsmXmlBatchWrite(kind: String, dir: String,
-    conf: Broadcast[SerializableConfiguration]) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new OsmXmlWriterFactory(kind, dir, conf)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+private[osmxml] case class XmlPart(kind: String) extends PartFormat {
+  override def ext: String = "osm"
+  override def encoder(out: OutputStream, name: String): PartEncoder =
+    new OsmXmlEncoder(kind, out)
 }
 
-private[osmxml] class OsmXmlWriterFactory(kind: String, dir: String,
-    conf: Broadcast[SerializableConfiguration]) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new OsmXmlDataWriter(kind, dir, partitionId, taskId, conf.value.value)
-}
+private[osmxml] class OsmXmlEncoder(kind: String, os: OutputStream) extends PartEncoder {
 
-private[osmxml] case class XmlCommitMessage(path: String) extends WriterCommitMessage
-
-private[osmxml] class OsmXmlDataWriter(kind: String, dir: String,
-    partitionId: Int, taskId: Long, conf: org.apache.hadoop.conf.Configuration)
-    extends DataWriter[InternalRow] {
-
-  private val fs = new Path(dir).getFileSystem(conf)
-  private val finalPath = new Path(dir, f"part-$partitionId%05d.osm")
-  private val tmpPath = new Path(dir, f".part-$partitionId%05d-$taskId.osm.tmp")
-  private val out = {
-    fs.mkdirs(new Path(dir))
-    new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      fs.create(tmpPath, true), java.nio.charset.StandardCharsets.UTF_8))
-  }
+  private val out = new java.io.BufferedWriter(
+    new java.io.OutputStreamWriter(os, java.nio.charset.StandardCharsets.UTF_8))
   out.write("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n")
   out.write("<osm version=\"0.6\" generator=\"graft-spark\">\n")
 
@@ -61,11 +42,7 @@ private[osmxml] class OsmXmlDataWriter(kind: String, dir: String,
     java.time.Instant.ofEpochSecond(micros / 1000000L,
       (micros % 1000000L) * 1000L).toString
 
-  private val elementName = kind match {
-    case "ways" => "way"
-    case "relations" => "relation"
-    case _ => "node"
-  }
+  private val elementName = kind.stripSuffix("s") // a checked kind: node, way or relation
 
   private val memberTypeName =
     Map("N" -> "node", "W" -> "way", "R" -> "relation")
@@ -118,13 +95,5 @@ private[osmxml] class OsmXmlDataWriter(kind: String, dir: String,
     out.write(sb.toString)
   }
 
-  override def commit(): WriterCommitMessage = {
-    out.write("</osm>\n"); out.close()
-    fs.delete(finalPath, false)
-    fs.rename(tmpPath, finalPath)
-    XmlCommitMessage(finalPath.toString)
-  }
-
-  override def abort(): Unit = { out.close(); fs.delete(tmpPath, false) }
-  override def close(): Unit = ()
+  override def finish(): Unit = { out.write("</osm>\n"); out.flush() }
 }

@@ -2,12 +2,17 @@ package graft.sources.warc
 
 import java.util
 
-import org.apache.hadoop.fs.Path
+import graft.sources.{FilePart, FileScan, FileSource, FileTable, PartFormat, PrunedReaderFactory, RowDecoder, SessionConf}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+import org.apache.spark.sql.connector.write.LogicalWriteInfo
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -35,14 +40,12 @@ import org.apache.spark.util.SerializableConfiguration
   * laid out (Common Crawl ships ~1 GB `.warc.gz` segments by the tens
   * of thousands — file-level parallelism IS the intended splitting;
   * per-record gzip members make mid-file splits impossible without an
-  * external index, same constraint as the PBF blob source). Column
-  * pruning projects the decoded record to the scan's required columns
-  * ([[graft.sources.Pruning]]); a payload-less metadata scan still
-  * reads the bytes (the framing requires it) but never materializes
-  * them into Spark rows. The reader and writer factories (batch and
-  * micro-batch) hold the session's Hadoop conf as one broadcast per
-  * scan or write ([[graft.sources.SessionConf]]); the conf itself is
-  * not serialized into each task.
+  * external index). Listing, column pruning, the write chain and the
+  * task commit are the shared file-source frame
+  * ([[graft.sources.FileTable]]), which the micro-batch stream and the
+  * CDX sidecar use too; a payload-less metadata scan still reads the
+  * bytes (the framing requires it) but never materializes them into
+  * Spark rows. Listings skip `.cdx` sidecars.
   */
 class WarcSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "warc"
@@ -71,62 +74,31 @@ object WarcSource {
 }
 
 private[warc] class WarcTable(schema: StructType, paths: Seq[String])
-    extends Table with SupportsRead with SupportsWrite {
-  override def name(): String = "warc"
-  override def schema(): StructType = schema
+    extends FileTable("warc", schema, paths) {
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.MICRO_BATCH_READ)
 
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder = {
-    require(paths.size == 1, "warc write needs exactly one target path")
-    val in = info.schema()
-    val gz = "gzip".equalsIgnoreCase(info.options.getOrDefault("compression", ""))
-    val idx = "true".equalsIgnoreCase(info.options.getOrDefault("index", ""))
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.Write {
-          override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-            new WarcBatchWrite(paths.head, in, gz, idx, graft.sources.SessionConf.broadcast())
-        }
-    }
-  }
+  override def plan(session: SparkSession, conf: Configuration,
+      files: Seq[FileStatus]): Seq[InputPartition] =
+    super.plan(session, conf, files.filter(WarcTable.isSegment))
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with Scan with Batch
-        with SupportsPushDownRequiredColumns {
-      private var required: StructType = schema
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = requiredSchema
-      override def build(): Scan = this
-      override def readSchema(): StructType = required
-      override def toBatch: Batch = this
-      override def planInputPartitions(): Array[InputPartition] = {
-        val conf = org.apache.spark.sql.SparkSession.active
-          .sessionState.newHadoopConf()
-        paths.flatMap { p =>
-          val hp = new Path(p)
-          val fs = hp.getFileSystem(conf)
-          val stats = fs.globStatus(hp) match {
-            case null => Array.empty[org.apache.hadoop.fs.FileStatus]
-            case gs => gs.flatMap { s =>
-              if (s.isDirectory) fs.listStatus(s.getPath).filter(_.isFile) else Array(s)
-            }
-          }
-          stats.filter(s => !s.getPath.getName.startsWith(".") &&
-              !s.getPath.getName.endsWith(".cdx")) // index sidecars
-            .map(s => WarcPartition(s.getPath.toString): InputPartition)
-        }.toArray
-      }
-      override def createReaderFactory(): PartitionReaderFactory =
-        new WarcReaderFactory(WarcSource.schema, required, graft.sources.SessionConf.broadcast())
-      override def toMicroBatchStream(checkpointLocation: String)
-          : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-        new WarcMicroBatchStream(paths, checkpointLocation, required,
-          graft.sources.SessionConf.broadcast())
+  override def decoder: RowDecoder = WarcDecoder
+
+  override def partFormat(info: LogicalWriteInfo): PartFormat = WarcPart(info.schema(),
+    gzip = "gzip".equalsIgnoreCase(info.options.getOrDefault("compression", "")),
+    index = "true".equalsIgnoreCase(info.options.getOrDefault("index", "")))
+
+  override def newScanBuilder(options: CaseInsensitiveStringMap): FileScan =
+    new FileScan(this, paths) {
+      override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+        new WarcMicroBatchStream(paths, checkpointLocation, readSchema(), SessionConf.broadcast())
     }
+}
+
+private[warc] object WarcTable {
+  /** A listed file other than a `.cdx` index sidecar. */
+  def isSegment(st: FileStatus): Boolean = !st.getPath.getName.endsWith(".cdx")
 }
 
 /** Streaming WARC ingest — `spark.readStream.format("warc").load(dir)`
@@ -153,7 +125,7 @@ private[warc] class WarcTable(schema: StructType, paths: Seq[String])
 private[warc] class WarcMicroBatchStream(paths: Seq[String],
     checkpointLocation: String, required: StructType,
     conf: Broadcast[SerializableConfiguration])
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
+    extends MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
   private case class WarcOffset(n: Long) extends Offset {
@@ -176,20 +148,8 @@ private[warc] class WarcMicroBatchStream(paths: Seq[String],
   }
   private val seenSet = scala.collection.mutable.HashSet.from(seen)
 
-  private def discover(): Seq[String] = paths.flatMap { p =>
-    val hp = new Path(p)
-    val pfs = hp.getFileSystem(conf.value.value)
-    val stats = pfs.globStatus(hp) match {
-      case null => Array.empty[org.apache.hadoop.fs.FileStatus]
-      case gs => gs.flatMap { s =>
-        if (s.isDirectory) pfs.listStatus(s.getPath).filter(_.isFile)
-        else Array(s)
-      }
-    }
-    stats.filter(s => !s.getPath.getName.startsWith(".") &&
-        !s.getPath.getName.endsWith(".cdx"))
-      .map(_.getPath.toString)
-  }
+  private def discover(): Seq[String] =
+    FileSource.list(paths, conf.value.value).filter(WarcTable.isSegment).map(_.getPath.toString)
 
   private def persistLog(): Unit = {
     val tmp = new Path(checkpointLocation, ".graft-warc-file-log.tmp")
@@ -197,9 +157,7 @@ private[warc] class WarcMicroBatchStream(paths: Seq[String],
     try out.write(seen.mkString("", "\n", "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    if (fs.exists(logPath)) fs.delete(logPath, false)
-    require(fs.rename(tmp, logPath),
-      s"could not persist WARC stream file log at $logPath")
+    FileSource.commit(fs, tmp, logPath)
   }
 
   override def latestOffset(): Offset = {
@@ -224,24 +182,19 @@ private[warc] class WarcMicroBatchStream(paths: Seq[String],
     require(e <= seen.size,
       s"WARC stream offset $e beyond persisted file log (${seen.size}) — " +
         "checkpoint and file-log location disagree")
-    (s until e).map(i => WarcPartition(seen(i)): InputPartition).toArray
+    (s until e).map(i => FilePart(seen(i)): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(WarcSource.schema, required, conf)
+    new PrunedReaderFactory(WarcDecoder, WarcSource.schema, required, conf)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-private[warc] case class WarcPartition(path: String) extends InputPartition
-
-private[warc] class WarcReaderFactory(full: StructType, required: StructType,
-    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    graft.sources.Pruning.project(
-      new WarcPartitionReader(partition.asInstanceOf[WarcPartition].path, conf.value.value),
-      full, required)
+private[warc] case object WarcDecoder extends RowDecoder {
+  override def open(p: InputPartition, conf: Configuration): PartitionReader[InternalRow] =
+    new WarcPartitionReader(p.asInstanceOf[FilePart].path, conf)
 }
 
 /** Streaming parse of one WARC file: version line → headers → payload
@@ -250,18 +203,10 @@ private[warc] class WarcReaderFactory(full: StructType, required: StructType,
   * stream decodes concatenated members, which is how per-record-gzipped
   * crawl segments are laid out).
   */
-private[warc] class WarcPartitionReader(path: String,
-    conf: org.apache.hadoop.conf.Configuration)
+private[warc] class WarcPartitionReader(path: String, conf: Configuration)
     extends PartitionReader[InternalRow] {
 
-  private val hp = new Path(path)
-  private val in: java.io.InputStream = {
-    val raw = hp.getFileSystem(conf).open(hp)
-    val codec =
-      new org.apache.hadoop.io.compress.CompressionCodecFactory(conf).getCodec(hp)
-    val base = if (codec == null) raw else codec.createInputStream(raw)
-    new java.io.BufferedInputStream(base, 1 << 16)
-  }
+  private val in = new java.io.BufferedInputStream(FileSource.open(path, conf), 1 << 16)
 
   private var row: InternalRow = _
 

@@ -1,11 +1,10 @@
 package graft.sources.warc
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.broadcast.Broadcast
+import java.io.OutputStream
+
+import graft.sources.{PartEncoder, PartFormat}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 
 /** Write side of the `warc` source: one `.warc` (or `.warc.gz`) file
   * per task. Rows arrive in any schema containing `payload binary`;
@@ -23,34 +22,18 @@ import org.apache.spark.util.SerializableConfiguration
   * stream to any concatenation-aware decoder (the read side's Hadoop
   * codec is one).
   */
-private[warc] class WarcBatchWrite(dir: String, in: StructType, gzip: Boolean,
-    index: Boolean,
-    conf: Broadcast[SerializableConfiguration]) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new WarcWriterFactory(dir, in, gzip, index, conf)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+private[warc] case class WarcPart(in: StructType, gzip: Boolean, index: Boolean)
+    extends PartFormat {
+  override def ext: String = if (gzip) "warc.gz" else "warc"
+  override def encoder(out: OutputStream, name: String): PartEncoder =
+    new WarcEncoder(in, gzip, index, out, name)
 }
 
-private[warc] class WarcWriterFactory(dir: String, in: StructType, gzip: Boolean,
-    index: Boolean,
-    conf: Broadcast[SerializableConfiguration]) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new WarcDataWriter(dir, in, gzip, index, partitionId, taskId, conf.value.value)
-}
-
-private[warc] case class WarcCommitMessage(path: String) extends WriterCommitMessage
-
-private[warc] class WarcDataWriter(dir: String, in: StructType, gzip: Boolean,
-    index: Boolean,
-    partitionId: Int, taskId: Long, conf: org.apache.hadoop.conf.Configuration)
-    extends DataWriter[InternalRow] {
-
-  private val ext = if (gzip) "warc.gz" else "warc"
-  private val fs = new Path(dir).getFileSystem(conf)
-  private val finalPath = new Path(dir, f"part-$partitionId%05d.$ext")
-  private val tmpPath = new Path(dir, f".part-$partitionId%05d-$taskId.$ext.tmp")
-  private val out = { fs.mkdirs(new Path(dir)); fs.create(tmpPath, true) }
+/** One task's records; with `index`, the `.cdx` sidecar committed next
+  * to the part file after it.
+  */
+private[warc] class WarcEncoder(in: StructType, gzip: Boolean, index: Boolean,
+    out: OutputStream, fileName: String) extends PartEncoder {
 
   private def ord(name: String): Int = in.fieldNames.indexOf(name)
   private val iPayload = ord("payload")
@@ -117,29 +100,13 @@ private[warc] class WarcDataWriter(dir: String, in: StructType, gzip: Boolean,
       // contract: seek(offset), read `length` bytes, gunzip one member)
       indexLines += s"${cell(iUri)}\t${cell(iId)}\t" +
         s"""{"offset": $bytesOut, "length": $recLen, """ +
-        s""""filename": "${finalPath.getName}"}"""
+        s""""filename": "$fileName"}"""
     }
     bytesOut += recLen
   }
 
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    fs.delete(finalPath, false)
-    fs.rename(tmpPath, finalPath)
-    if (index) {
-      // sidecar next to the segment, task-committed the same way
-      val idxFinal = new Path(dir, f"part-$partitionId%05d.cdx")
-      val idxTmp = new Path(dir, f".part-$partitionId%05d-$taskId.cdx.tmp")
-      val io = fs.create(idxTmp, true)
-      try io.write(indexLines.mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally io.close()
-      fs.delete(idxFinal, false)
-      fs.rename(idxTmp, idxFinal)
-    }
-    WarcCommitMessage(finalPath.toString)
-  }
-
-  override def abort(): Unit = { out.close(); fs.delete(tmpPath, false) }
-  override def close(): Unit = ()
+  override def sidecars: Seq[(String, Array[Byte])] =
+    if (!index) Nil
+    else Seq("cdx" -> indexLines.mkString("", "\n", "\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
 }
